@@ -2,20 +2,29 @@
 
 ``spark.createDataFrame(list_of_rows, schema)`` backs the frame with a
 PYTHON RDD of pickled rows: every ACTION whose plan contains such a
-frame forks Python workers to rehydrate it — measured ~0.25s per
-action on this harness, paid again on every re-execution (broadcast
-subtrees, unions, repeated consumers). For the trained-book /
-step-frame literals this engine creates constantly (KC/KS codebooks,
-Newton step rows, trajectory rows), that Python round IS the
-dominant cost of the downstream job at small SF and pure overhead at
-any SF.
+frame starts one Python worker task per partition to rehydrate it —
+even for an empty list, which still parallelizes into
+defaultParallelism empty partitions. Each such task costs ~0.2s of
+CPU, and the cost is not the rows: pyspark's worker calls
+``importlib.invalidate_caches()`` on every task, and on Python 3.11
+that makes each of the 16 zipimporters over ``pyspark.zip`` re-read
+the archive's directory (~27k entries). Measured ~0.25s per action
+on a 4-core local session, paid again on every re-execution
+(broadcast subtrees, unions, repeated consumers). For the
+trained-book / step-frame literals this engine creates constantly
+(KC/KS codebooks, Newton step rows, trajectory rows) and for the
+empty "nothing seen yet" frames of the streaming runners, that
+Python round IS the dominant cost of the downstream job at small SF
+and pure overhead at any SF.
 
-``literal_frame`` builds the same rows through the Arrow
-``createDataFrame(pandas)`` path instead: the rows are converted ONCE
-at creation (driver-side, Arrow batch → JVM), execution reads JVM
-memory with no Python workers — measured 0.034s/action vs 0.27, same
-values, same declared schema. Falls back to the plain path for empty
-input (Arrow needs at least the dtypes pandas can't infer there).
+``literal_frame`` keeps the rows in the JVM instead:
+- non-empty rows go through the Arrow ``createDataFrame(pandas)``
+  path, converted ONCE at creation (driver-side, Arrow batch → JVM);
+  execution reads JVM memory with no Python workers — measured
+  0.034s/action vs 0.27, same values, same declared schema;
+- no rows become an empty JVM ``LocalRelation`` with exactly the
+  declared schema (names, types and nullability), so an action over
+  it runs no task at all.
 """
 
 from __future__ import annotations
@@ -41,7 +50,11 @@ def literal_frame(
     ``spark.createDataFrame(rows, schema)``."""
     st = _parse_schema(spark, schema)
     if not rows:
-        return spark.createDataFrame(rows, st)
+        jspark = spark._jsparkSession
+        jdf = jspark.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jspark.parseDataType(st.json())
+        )
+        return DataFrame(jdf, spark)
     import pandas as pd
 
     pdf = pd.DataFrame(

@@ -22,11 +22,13 @@ cluster; unbounded key-history should switch to
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_mp_transactions_spark.functions.literalframe import literal_frame
 from etl_mp_transactions_spark.sources.tables import SCHEMAS
 
 
@@ -65,62 +67,91 @@ def run_available_now_to_parquet(
     return df.sparkSession.read.parquet(out_dir)
 
 
-def stream_state_partitions(
-    src_dir: str, target_bytes: int | None = None
-) -> int:
-    """Scale-adaptive state-partition count for a stateful stream
-    over a staged file source: ceil(staged bytes / target), floor 8.
-
-    A stateful streaming query's state partitioning is FIXED at
-    ``spark.sql.shuffle.partitions`` when the query first starts and
-    AQE cannot coalesce it (AQE is disabled for stateful workloads),
-    so inheriting the session's batch default (2·cores at the bench)
-    pays the per-partition per-operator store open/commit fixed cost
-    regardless of data size — measured on the sf0.1 funnel join:
-    64 partitions = 14.5s (4.7s for the EMPTY finalization batch),
-    8 partitions = 6.1s, identical output. Deriving the count from
-    the staged input size (guide §2.2 "fewer, larger partitions",
-    made scale-adaptive) keeps the local bench honest and grows the
-    partition count linearly with the corpus; the per-partition
-    target is env-tunable (SPARK_GRAFT_STREAM_PART_BYTES, default
-    64 MiB — at cluster scale raise toward 128-512 MiB so state
-    stores stay few and fat)."""
-    import math
-
-    if target_bytes is None:
-        target_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_STREAM_PART_BYTES", str(64 * 1024 * 1024)
-            )
-        )
-    total = 0
-    for root, _, fs in os.walk(src_dir):
+def _staged_bytes(
+    src_dir: str, max_files_per_trigger: int | None = None
+) -> tuple[int, int]:
+    """(bytes of every file the file source would read under
+    ``src_dir``, bytes one trigger reads). Names starting with ``_`` or
+    ``.`` are skipped, as the file source skips them. With
+    ``max_files_per_trigger`` a trigger reads that many files of the
+    mean size; without it a trigger can read everything staged."""
+    sizes = []
+    for root, dirs, fs in os.walk(src_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for f in fs:
+            if f.startswith(("_", ".")):
+                continue
             try:
-                total += os.path.getsize(os.path.join(root, f))
+                sizes.append(os.path.getsize(os.path.join(root, f)))
             except OSError:
                 pass
-    return max(8, math.ceil(total / target_bytes))
+    total = sum(sizes)
+    if max_files_per_trigger and len(sizes) > max_files_per_trigger:
+        return total, math.ceil(total * max_files_per_trigger / len(sizes))
+    return total, total
 
 
 class scaled_state_partitions:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` to the
-    scale-adaptive count for the duration of one stream start+await,
-    then restore the session value. Streaming reads the conf at query
-    start; batch queries in the same session are unaffected because
-    every runner here blocks until its stream terminates."""
+    """Context manager: size a stateful stream over a staged file
+    source from the staged bytes, for the duration of one stream
+    start+await. Two counts, both ceil(bytes / target), where the
+    target is env-tunable (SPARK_GRAFT_STREAM_PART_BYTES, default
+    64 MiB — at cluster scale raise toward 128-512 MiB so state stores
+    stay few and fat):
 
-    def __init__(self, spark: SparkSession, src_dir: str):
+    - ``.partitions``, the STATE PARTITIONS: ceil(staged bytes /
+      target), floor 8, pinned as ``spark.sql.shuffle.partitions``
+      and restored on exit. A stateful query's state partitioning is
+      FIXED at that conf when the query FIRST starts — the count is
+      written into the checkpoint and every restart reuses it — and
+      AQE cannot coalesce it (AQE is disabled for stateful workloads),
+      so inheriting the session's batch default (2·cores at the bench)
+      pays the per-partition per-operator store open/commit fixed cost
+      regardless of data size — measured on the sf0.1 funnel join:
+      64 partitions = 14.5s (4.7s for the EMPTY finalization batch),
+      8 partitions = 6.1s, identical output. The floor keeps room for
+      the input to grow after the first start. Streaming reads the
+      conf at query start; batch queries in the same session are
+      unaffected because every runner here blocks until its stream
+      terminates.
+    - ``.tasks``, the TASKS PER BATCH a runner may coalesce the state
+      partitions into before its sink: ceil(bytes one trigger reads /
+      target), no floor. A coalesce is plan, not checkpoint, so this
+      count is derived again on EVERY start. Each sink task writes its
+      own files (one per output partition value, each forking
+      ``chmod`` on a local filesystem without native Hadoop) and
+      deserializes the Hadoop conf, so a small batch spread over 8
+      tasks pays 8x that fixed cost for no parallel gain. Pass
+      ``max_files_per_trigger`` when the stream sets it: the count
+      then follows the mean file size, not the bucket. Without it the
+      count follows everything staged, which over-counts a restart
+      that reads only new files once the staged total passes the
+      target.
+
+    Deriving both from the staged input size (guide §2.2 "fewer,
+    larger partitions", made scale-adaptive) keeps the local bench
+    honest and grows the counts linearly with the corpus."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        src_dir: str,
+        max_files_per_trigger: int | None = None,
+    ):
         self._spark = spark
         self._src_dir = src_dir
+        self._max_files = max_files_per_trigger
         self._old: str | None = None
 
     def __enter__(self):
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(stream_state_partitions(self._src_dir)),
+        target = int(
+            os.environ.get("SPARK_GRAFT_STREAM_PART_BYTES", str(64 * 1024 * 1024))
         )
+        total, per_trigger = _staged_bytes(self._src_dir, self._max_files)
+        self.partitions = max(8, math.ceil(total / target))
+        self.tasks = max(1, math.ceil(per_trigger / target))
+        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
+        self._spark.conf.set("spark.sql.shuffle.partitions", str(self.partitions))
         return self
 
     def __exit__(self, *exc):
@@ -594,7 +625,7 @@ def stream_incremental_dedup_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(store_dir) else []
         if not dirs:
-            return spark.createDataFrame([], key_schema)
+            return literal_frame(spark, [], key_schema)
         return spark.read.schema(key_schema).parquet(*dirs)
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -629,9 +660,12 @@ def stream_incremental_dedup_run(
         .start()
     )
     q.awaitTermination()
+    # read the directory, not a ``batch=*`` glob: a glob makes the
+    # reader probe for a sink metadata log under it and log a
+    # FileNotFoundException stack on every call
     return spark.read.schema(
         "ch string, canonical_doc_id long"
-    ).parquet(os.path.join(out_dir, "batch=*"))
+    ).parquet(out_dir).select("ch", "canonical_doc_id")
 
 
 def bootstrap_seen_store(
@@ -694,7 +728,7 @@ def stream_neardup_index_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(index_dir) else []
         if not dirs:
-            return spark.createDataFrame([], idx_schema)
+            return literal_frame(spark, [], idx_schema)
         return spark.read.schema(idx_schema).parquet(*dirs)
 
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -834,7 +868,7 @@ def stream_ivfpq_ingest_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(index_dir) else []
         if not dirs:
-            return spark.createDataFrame([], "vec_id long")
+            return literal_frame(spark, [], "vec_id long")
         return spark.read.schema(
             "vec_id long, cid long, pq_code long, distortion long"
         ).parquet(*dirs).select("vec_id")
@@ -899,7 +933,7 @@ def stream_quality_gate_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(verdict_dir) else []
         if not dirs:
-            return spark.createDataFrame([], "doc_id long")
+            return literal_frame(spark, [], "doc_id long")
         return spark.read.schema(out_schema).parquet(*dirs).select("doc_id")
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -970,7 +1004,7 @@ def stream_rerank_serving_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(out_dir) else []
         if not dirs:
-            return spark.createDataFrame([], "query_id long")
+            return literal_frame(spark, [], "query_id long")
         return (
             spark.read.schema(out_schema).parquet(*dirs)
             .select("query_id").distinct()
@@ -1029,7 +1063,7 @@ def stream_delete_tombstones_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(tomb_dir) else []
         if not dirs:
-            return spark.createDataFrame([], "vec_id long")
+            return literal_frame(spark, [], "vec_id long")
         return spark.read.schema("vec_id long").parquet(*dirs)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1116,7 +1150,7 @@ def stream_hybrid_serving_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(out_dir) else []
         if not dirs:
-            return spark.createDataFrame([], "query_id long")
+            return literal_frame(spark, [], "query_id long")
         return (
             spark.read.schema(out_schema).parquet(*dirs)
             .select("query_id").distinct()
@@ -1183,7 +1217,7 @@ def stream_scene_cuts_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ] if os.path.isdir(out_dir) else []
         if not dirs:
-            return spark.createDataFrame([], "asset_id long")
+            return literal_frame(spark, [], "asset_id long")
         return (
             spark.read.schema(out_schema).parquet(*dirs)
             .select("asset_id").distinct()
@@ -1308,7 +1342,7 @@ def stream_graph_insert_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ]
         if not dirs:
-            return spark.createDataFrame([], emb_schema)
+            return literal_frame(spark, [], emb_schema)
         return spark.read.schema(emb_schema).parquet(*dirs)
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
@@ -1442,7 +1476,7 @@ def stream_graph_delete_run(
             if d.startswith("batch=")
         ]
         if not dirs:
-            return spark.createDataFrame([], schema)
+            return literal_frame(spark, [], schema)
         return spark.read.schema(schema).parquet(*dirs)
 
     def _tombs_except(batch_id: int) -> DataFrame:
@@ -1452,7 +1486,7 @@ def stream_graph_delete_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ]
         if not dirs:
-            return spark.createDataFrame([], id_schema)
+            return literal_frame(spark, [], id_schema)
         return spark.read.schema(id_schema).parquet(*dirs)
 
     def _frags_except(batch_id: int) -> DataFrame:
@@ -1472,7 +1506,7 @@ def stream_graph_delete_run(
             if d.startswith("batch=") and d != f"batch={batch_id}"
         ]
         if not dirs:
-            return spark.createDataFrame([], frag_schema)
+            return literal_frame(spark, [], frag_schema)
         return spark.read.schema(frag_schema).parquet(*dirs)
 
     def _view(frags: DataFrame, tombs: DataFrame) -> DataFrame:

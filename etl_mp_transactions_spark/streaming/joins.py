@@ -65,7 +65,7 @@ def run_funnel_stream(
     purchases = stream.filter(F.col("event_type") == "purchase")
     # the interval join keeps 4 state stores per partition; size the
     # state partitioning from the staged input, not the batch default
-    # (filesource.stream_state_partitions — measured 14.5s -> 6.1s at
+    # (filesource.scaled_state_partitions — measured 14.5s -> 6.1s at
     # sf0.1 with identical output)
     with scaled_state_partitions(spark, src_dir):
         return run_available_now_to_parquet(

@@ -38,8 +38,13 @@ def run_silver_stream(
 
     from etl_mp_transactions_spark.streaming.filesource import (
         run_available_now_to_parquet,
+        scaled_state_partitions,
     )
 
-    return run_available_now_to_parquet(
-        silver, checkpoint_dir, out_dir, partition_by=["company_id"]
-    )
+    # state partitions sized from the staged bronze (fixed at first
+    # start), the sink's tasks from the bytes one trigger reads
+    with scaled_state_partitions(spark, bronze_dir, max_files_per_trigger) as parts:
+        return run_available_now_to_parquet(
+            silver.coalesce(parts.tasks), checkpoint_dir, out_dir,
+            partition_by=["company_id"],
+        )

@@ -60,8 +60,10 @@ def main() -> int:
 
     row = df.select(
         F.count(F.lit(1)).alias("n"),
+        # a sum, unlike bit_xor, does not cancel a duplicated pair of
+        # rows; DECIMAL(38,0) cannot overflow
         F.expr(
-            "bit_xor(xxhash64(" + ", ".join(df.columns) + "))"
+            "sum(cast(xxhash64(" + ", ".join(df.columns) + ") as decimal(38,0)))"
         ).alias("h"),
     ).collect()[0]
     time.sleep(2)  # let the listener bus drain
