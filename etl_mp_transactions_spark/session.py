@@ -40,6 +40,22 @@ def get_spark(
       checksum keys would otherwise straggle a shuffle.
     - nested-schema pruning + vectorized reader: scans of the nested
       bronze shape read only the referenced leaf fields.
+    - streaming checkpoints commit through
+      ``FileSystemBasedCheckpointFileManager``, the manager Spark
+      falls back to on filesystems without a FileContext binding.
+      Every offset, commit, source/sink log and state-store file is
+      written to a temp file and renamed into place. The default
+      FileContext manager renames through ``FileContext.rename``,
+      which on the local filesystem without the native Hadoop library
+      resolves links by starting a ``readlink`` process per call
+      (``RawLocalFileSystem.getFileLinkStatus``); ``FileSystem.rename``
+      moves the file and its ``.crc`` with ``File.renameTo`` and
+      starts none. On ``file://`` the commit semantics are the same:
+      both check that the destination does not exist and then rename,
+      so a second writer of the same batch id still fails, and the
+      Hadoop ``.crc`` sidecars and Spark's state-file checksums
+      (``<version>.delta.crc``) are still written and verified
+      (tests/test_checkpoint_manager.py).
     """
     cpus = _DEFAULT_LOCAL_CPUS
     if master is None:
@@ -84,6 +100,12 @@ def get_spark(
         # --- python boundary: Arrow everywhere we cross it ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # --- streaming checkpoints: rename with no process spawns ---
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # quieter local runs
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))

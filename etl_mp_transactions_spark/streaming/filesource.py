@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_mp_transactions_spark.functions.literalframe import literal_frame
 from etl_mp_transactions_spark.sources.tables import SCHEMAS
@@ -118,10 +119,13 @@ class scaled_state_partitions:
       partitions into before its sink: ceil(bytes one trigger reads /
       target), no floor. A coalesce is plan, not checkpoint, so this
       count is derived again on EVERY start. Each sink task writes its
-      own files (one per output partition value, each forking
-      ``chmod`` on a local filesystem without native Hadoop) and
-      deserializes the Hadoop conf, so a small batch spread over 8
-      tasks pays 8x that fixed cost for no parallel gain. Pass
+      own files, one per output partition value, and deserializes the
+      Hadoop conf. On a local filesystem without native Hadoop every
+      file or directory created starts a ``chmod`` process, so one
+      sink file costs two (the file and its ``.crc``) plus one per
+      directory it creates (a new partition value's directory, or the
+      task's ``_temporary`` attempt directories). A small batch spread
+      over 8 tasks pays 8x that fixed cost for no parallel gain. Pass
       ``max_files_per_trigger`` when the stream sets it: the count
       then follows the mean file size, not the bucket. Without it the
       count follows everything staged, which over-counts a restart
@@ -385,9 +389,10 @@ def stream_continuous_agg_run(
         .start()
     )
     q.awaitTermination()
+    # the directory, not a ``b=*`` glob (see _read_batches); the
+    # discovered ``b`` column drops out in the group-by
     return (
-        spark.read.option("basePath", state_dir)
-        .parquet(os.path.join(state_dir, "b=*"))
+        spark.read.parquet(state_dir)
         .groupBy("window_start", "event_type")
         .agg(
             F.sum("n").alias("n"),
@@ -580,6 +585,17 @@ def staged_event_batches_cached(
     return target
 
 
+def _read_batches(spark: SparkSession, root: str, schema: str) -> DataFrame:
+    """Every ``batch=<id>`` partition under ``root``, as the declared
+    columns. Reads the directory, not a ``batch=*`` glob: a glob makes
+    the reader probe for a sink metadata log under it and log a
+    FileNotFoundException stack on every call. The ``batch`` column
+    that partition discovery adds is dropped by the select."""
+    return spark.read.schema(schema).parquet(root).select(
+        *StructType.fromDDL(schema).fieldNames()
+    )
+
+
 def stream_incremental_dedup_run(
     spark: SparkSession,
     src_dir: str,
@@ -660,12 +676,7 @@ def stream_incremental_dedup_run(
         .start()
     )
     q.awaitTermination()
-    # read the directory, not a ``batch=*`` glob: a glob makes the
-    # reader probe for a sink metadata log under it and log a
-    # FileNotFoundException stack on every call
-    return spark.read.schema(
-        "ch string, canonical_doc_id long"
-    ).parquet(out_dir).select("ch", "canonical_doc_id")
+    return _read_batches(spark, out_dir, "ch string, canonical_doc_id long")
 
 
 def bootstrap_seen_store(
@@ -813,9 +824,9 @@ def stream_neardup_index_run(
         .start()
     )
     q.awaitTermination()
-    return spark.read.schema(
-        "doc_id long, dup_kind string, matched_old_id long"
-    ).parquet(os.path.join(out_dir, "batch=*"))
+    return _read_batches(
+        spark, out_dir, "doc_id long, dup_kind string, matched_old_id long"
+    )
 
 
 def bootstrap_neardup_index(
@@ -897,9 +908,9 @@ def stream_ivfpq_ingest_run(
         .start()
     )
     q.awaitTermination()
-    return spark.read.schema(
-        "vec_id long, cid long, pq_code long, distortion long"
-    ).parquet(os.path.join(index_dir, "batch=*"))
+    return _read_batches(
+        spark, index_dir, "vec_id long, cid long, pq_code long, distortion long"
+    )
 
 
 def stream_quality_gate_run(
@@ -954,9 +965,7 @@ def stream_quality_gate_run(
         .start()
     )
     q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(verdict_dir, "batch=*")
-    )
+    return _read_batches(spark, verdict_dir, out_schema)
 
 
 def stream_rerank_serving_run(
@@ -1033,9 +1042,7 @@ def stream_rerank_serving_run(
         .start()
     )
     q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(out_dir, "batch=*")
-    )
+    return _read_batches(spark, out_dir, out_schema)
 
 
 def stream_delete_tombstones_run(
@@ -1087,11 +1094,7 @@ def stream_delete_tombstones_run(
         .start()
     )
     q.awaitTermination()
-    return (
-        spark.read.schema("vec_id long")
-        .parquet(os.path.join(tomb_dir, "batch=*"))
-        .distinct()
-    )
+    return _read_batches(spark, tomb_dir, "vec_id long").distinct()
 
 
 def stream_hybrid_serving_run(
@@ -1183,9 +1186,7 @@ def stream_hybrid_serving_run(
         .start()
     )
     q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(out_dir, "batch=*")
-    )
+    return _read_batches(spark, out_dir, out_schema)
 
 
 def stream_scene_cuts_run(
@@ -1260,9 +1261,7 @@ def stream_scene_cuts_run(
         .start()
     )
     q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(out_dir, "batch=*")
-    )
+    return _read_batches(spark, out_dir, out_schema)
 
 
 def stream_graph_insert_run(
@@ -1400,9 +1399,7 @@ def stream_graph_insert_run(
         .start()
     )
     q.awaitTermination()
-    frags = spark.read.schema(edge_schema).parquet(
-        os.path.join(edges_dir, "batch=*")
-    )
+    frags = _read_batches(spark, edges_dir, edge_schema)
     w = Window.partitionBy("src").orderBy("d2", "dst")
     return (
         frags.withColumn("rnk", F.row_number().over(w).cast("long"))
