@@ -5,8 +5,8 @@ The reference ingests BigQuery extracts and Avro blobs; a Spark
 deployment of the same pipeline also meets CSV/JSONL drops and ORC
 lakes. Each query stages the orders table into the format under test
 (Spark executors write — no driver collect; staged once per
-(format, SF) per machine into an immutable atomic-rename-published
-cache dir, the staged_events_cached pattern, so gate/bench sweeps
+(format, SF) per machine into an immutable cache dir published by
+workdirs.publish_fixture, so gate/bench sweeps
 neither leak temp copies nor re-pay the write), reads it back with an
 explicit schema, and runs a projection+filter whose oracle is the
 same expression over the canonical parquet view — so the check proves
@@ -46,37 +46,23 @@ _STAGE_VERSION = "v1"
 
 def _cached_stage(spark, sf_dir: str, tag: str, build) -> str:
     """Immutable staged fixture keyed by (tag, SF, version), built
-    once per machine with an atomic-rename publish — the
-    staged_events_cached pattern (streaming/filesource.py). Repeated
+    once per machine by ``workdirs.publish_fixture``. Repeated
     gate/bench sweeps pay the staging write zero times instead of
     once per run, and nothing leaks: there is exactly one cached copy
     per key. ``build(df_orders, out_path)`` performs the distributed
     write into ``out_path``."""
-    import shutil
-    import uuid
+    from etl_mp_transactions_spark.workdirs import publish_fixture
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    target = os.path.join(
-        tempfile.gettempdir(), f"sg_stage_{_STAGE_VERSION}_{tag}_{sf_tag}"
-    )
-    marker = os.path.join(target, "_DONE")
-    if not os.path.exists(marker):
-        staging = f"{target}.build-{uuid.uuid4().hex[:8]}"
-        os.makedirs(staging, exist_ok=True)
-        build(
+    target = publish_fixture(
+        os.path.join(
+            tempfile.gettempdir(), f"sg_stage_{_STAGE_VERSION}_{tag}_{sf_tag}"
+        ),
+        lambda staging: build(
             load_table(spark, sf_dir, "orders"),
             os.path.join(staging, "orders"),
-        )
-        with open(os.path.join(staging, "_DONE"), "w") as fh:
-            fh.write("ok\n")
-        try:
-            os.rename(staging, target)
-        except OSError:
-            if os.path.exists(marker):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                shutil.rmtree(target, ignore_errors=True)
-                os.rename(staging, target)
+        ),
+    )
     return os.path.join(target, "orders")
 
 

@@ -1300,35 +1300,16 @@ def r25_stream_graph_insert(spark, sf_dir):
     all fragments must equal the batch frozen-books rebuild bit for
     bit — the SAME oracle as graph_ann_incremental_insert."""
     import os
-    import shutil
-    import uuid
 
     from etl_mp_transactions_spark.streaming import filesource
     from etl_mp_transactions_spark.workdirs import run_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     work = run_dir("r25_graph")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     arriving = emb.filter(~F.expr(_BASE_PRED)).withColumn(
         "g", F.expr("(vec_id div 10) % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        arriving.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(arriving, os.path.join(work, "in"))
     base = emb.filter(F.expr(_BASE_PRED))
     books = gann_books(base)
     return filesource.stream_graph_insert_run(
@@ -1531,35 +1512,16 @@ def r26_stream_graph_delete(spark, sf_dir):
     ``graph_ann_delete_repair`` — the SAME oracle (frozen-books
     rebuild over survivors)."""
     import os
-    import shutil
-    import uuid
 
     from etl_mp_transactions_spark.streaming import filesource
     from etl_mp_transactions_spark.workdirs import run_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     work = run_dir("r26_graph_del")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     tombs = emb.filter(~F.expr(_DEL_PRED)).select("vec_id").withColumn(
         "g", F.expr("(vec_id div 10) % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        tombs.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(tombs, os.path.join(work, "in"))
     books = gann_books(emb)
     return filesource.stream_graph_delete_run(
         spark,

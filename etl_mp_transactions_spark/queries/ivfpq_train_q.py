@@ -1694,35 +1694,16 @@ def r22_stream_delete_serve(spark, sf_dir):
     tombstone table must equal the batch ivfpq_delete_serve bit for
     bit — same oracle."""
     import os
-    import shutil
-    import uuid
 
     from etl_mp_transactions_spark.streaming import filesource
     from etl_mp_transactions_spark.workdirs import run_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     work = run_dir("r22_delserve")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     dels = emb.select("vec_id").filter(F.expr(DELETE_PRED)).withColumn(
         "g", F.expr("(vec_id div 7) % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        dels.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(dels, os.path.join(work, "in"))
     tombs = filesource.stream_delete_tombstones_run(
         spark,
         stage,

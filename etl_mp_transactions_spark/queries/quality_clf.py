@@ -595,35 +595,15 @@ def r20_stream_quality_gate(spark, sf_dir):
     partition-overwrite + already-scored-skip construction). The
     final verdict table must equal the batch oracle (train on base,
     score arrivals) bit for bit."""
-    import shutil
-    import uuid
-
     from etl_mp_transactions_spark.streaming import filesource
     from etl_mp_transactions_spark.workdirs import run_dir
 
     docs = load_table(spark, sf_dir, "documents")
     work = run_dir("r20_qgate")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     arriving = docs.filter(F.expr(_STREAM_ARRIVING_PRED)).withColumn(
         "g", F.expr("(doc_id div 5) % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        arriving.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(arriving, os.path.join(work, "in"))
     base = docs.filter(F.expr(_STREAM_BASE_PRED))
     wb = _bigrams_df(base)
     lm = _lm_from(wb).localCheckpoint(eager=True)

@@ -74,15 +74,9 @@ def s3_avro_scan(spark, sf_dir):
     from etl_mp_transactions_spark.sources.avro import read_avro
     from etl_mp_transactions_spark.sources.avro_py import write_container
     from etl_mp_transactions_spark.sources.tables import load_table
+    from etl_mp_transactions_spark.workdirs import publish_fixture
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    # immutable machine-level fixture cache (atomic-rename publish, like
-    # sources/bronze.staged_bronze): the per-partition pure-Python Avro
-    # encode is fixture prep, paid once per (SF, machine), while the
-    # operator under test — the DataSource read path — runs fresh every
-    # call. Concurrent losers read the winner's identical copy.
-    target = os.path.join(tempfile.gettempdir(), f"sg_avro_v1_{sf_tag}")
-
     schema = {
         "type": "record",
         "name": "event",
@@ -93,13 +87,8 @@ def s3_avro_scan(spark, sf_dir):
             {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
         ],
     }
-    marker = os.path.join(target, "_DONE")
-    if not os.path.exists(marker):
-        import shutil
-        import uuid
 
-        staging = f"{target}.build-{uuid.uuid4().hex[:8]}"
-        os.makedirs(staging, exist_ok=True)
+    def build(staging):
         # distributed fixture write: each task encodes ITS partition to
         # one container file (write-to-temp + atomic rename guards task
         # retries) — no driver-side collect, so staging scales with SF
@@ -113,6 +102,8 @@ def s3_avro_scan(spark, sf_dir):
         )
 
         def _write_part(rows):
+            import uuid
+
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
@@ -121,15 +112,15 @@ def s3_avro_scan(spark, sf_dir):
             os.rename(tmp, os.path.join(staging, f"part-{pid}.avro"))
 
         ev.foreachPartition(_write_part)
-        open(os.path.join(staging, "_DONE"), "w").close()
-        try:
-            os.rename(staging, target)
-        except OSError:
-            if os.path.exists(marker):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                shutil.rmtree(target, ignore_errors=True)
-                os.rename(staging, target)
+
+    # immutable machine-level fixture cache (workdirs.publish_fixture,
+    # like sources/bronze.staged_bronze): the per-partition pure-Python
+    # Avro encode is fixture prep, paid once per (SF, machine), while
+    # the operator under test — the DataSource read path — runs fresh
+    # every call. Concurrent losers read the winner's identical copy.
+    target = publish_fixture(
+        os.path.join(tempfile.gettempdir(), f"sg_avro_v1_{sf_tag}"), build
+    )
 
     df = read_avro(spark, target)
     return df.select(

@@ -28,7 +28,7 @@ from etl_mp_transactions_spark.streaming.filesource import (
 )
 from etl_mp_transactions_spark.registry import query
 from etl_mp_transactions_spark.sources.tables import load_table
-from etl_mp_transactions_spark.workdirs import run_dir
+from etl_mp_transactions_spark.workdirs import publish_fixture, run_dir
 
 
 @query(
@@ -806,6 +806,7 @@ def r15_kappa_backfill_union(spark, sf_dir):
     SAME declarative plan in both execution modes and its state is
     mergeable (count/sum over integer cents), so where the
     batch/stream boundary falls cannot change the answer."""
+    import shutil
     import uuid
 
     from etl_mp_transactions_spark.streaming.filesource import (
@@ -827,22 +828,14 @@ def r15_kappa_backfill_union(spark, sf_dir):
 
     stage = staged_event_batches_cached(spark, sf_dir, n_batches=4)
     # the file source wants a directory: publish a cached tail dir
-    # holding only the live-tail file (atomic rename, like the stage)
-    tail_dir = f"{stage}_tail"
-    if not os.path.exists(os.path.join(tail_dir, "batch-0003.parquet")):
-        import shutil
-        import uuid as _uuid
-
-        building = f"{tail_dir}.build-{_uuid.uuid4().hex[:8]}"
-        os.makedirs(building, exist_ok=True)
-        shutil.copy(
+    # holding only the live-tail file (published like the stage)
+    tail_dir = publish_fixture(
+        f"{stage}_tail",
+        lambda building: shutil.copy(
             os.path.join(stage, "batch-0003.parquet"),
             os.path.join(building, "batch-0003.parquet"),
-        )
-        try:
-            os.rename(building, tail_dir)
-        except OSError:
-            shutil.rmtree(building, ignore_errors=True)
+        ),
+    )
     tail_stream = stream_files_available_now(
         spark, tail_dir, schema=_events_schema()
     )
@@ -1026,33 +1019,12 @@ def r17_stream_incremental_dedup(spark, sf_dir):
     it. The batch twin is dedup_incremental_new_vs_old; the bounded-
     state story is SeenKeysStore.compact over the same partition
     layout."""
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents")
     work = run_dir("r17_incdedup")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     newd = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
         "g", F.expr("(doc_id div 5) % 4")
     )
-    t0 = 1700000000  # fixed epoch: mtime order == batch order
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        newd.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    # replay of batch 0, newest mtime -> processed last, contributes 0
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(newd, os.path.join(work, "in"))
     store_dir = os.path.join(work, "store")
     filesource.bootstrap_seen_store(
         spark,
@@ -1138,32 +1110,12 @@ def r18_stream_neardup_index(spark, sf_dir):
     md5 minhash family, including the arrival-order condition (a doc
     in batch g only matches docs from batches < g or the bootstrap
     corpus)."""
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents")
     work = run_dir("r18_neardup")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     newd = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
         "g", F.expr("(doc_id div 5) % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        newd.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(newd, os.path.join(work, "in"))
     index_dir = os.path.join(work, "index")
     filesource.bootstrap_neardup_index(
         spark, docs.filter(F.col("doc_id") % 5 != 0), index_dir
@@ -1212,34 +1164,14 @@ def r19_stream_ivfpq_ingest(spark, sf_dir):
     overwrite, the r17 no-ledger construction, made trivial here by
     frozen-book per-vector independence). The final index must equal
     the batch ivfpq_incremental_encode bit for bit — same oracle."""
-    import shutil
-    import uuid
-
     from etl_mp_transactions_spark.operators import ivfpq as ivfpq_ops
 
     emb = load_table(spark, sf_dir, "embeddings")
     work = run_dir("r19_ivfpq")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     arriving = emb.filter(F.expr(_ARRIVING_PRED)).withColumn(
         "g", F.expr("(vec_id div 8) % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        arriving.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(arriving, os.path.join(work, "in"))
     base = emb.filter(F.expr(_BASE_PRED))
     cb = ivfpq_ops.coarse_books(base)
     pb = ivfpq_ops.residual_books(ivfpq_ops.coarse_assign(base, cb))
@@ -1497,38 +1429,18 @@ def r21_stream_rerank_serving(spark, sf_dir):
     vectors — the IndexRefineFlat serving path online. The final
     result table must equal the batch ivfpq_rerank_topk bit for bit —
     same oracle."""
-    import shutil
-    import uuid
-
     from etl_mp_transactions_spark.operators import ivfpq_train
     from etl_mp_transactions_spark.operators.ivfpq import _encode_resid
     from etl_mp_transactions_spark.operators.pq import _quantized
 
     emb = load_table(spark, sf_dir, "embeddings")
     work = run_dir("r21_rerank")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     qv = _quantized(emb, "vec_id")
     qids = _qset_df(qv).select(F.col("query_id").alias("vec_id"))
     arriving = emb.join(
         F.broadcast(qids), "vec_id", "left_semi"
     ).withColumn("g", F.expr("vec_id % 4"))
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        arriving.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(arriving, os.path.join(work, "in"))
     cb, pb, resid = ivfpq_train.trained_books(emb)
     codes, _ = _encode_resid(resid, pb)
     out = filesource.stream_rerank_serving_run(
@@ -1566,32 +1478,12 @@ def r23_stream_hybrid_serving(spark, sf_dir):
     arm from the arriving vector, RRF-fused top-10. The final result
     table must equal the batch hybrid_rrf_fusion bit for bit — same
     oracle."""
-    import shutil
-    import uuid
-
     emb = load_table(spark, sf_dir, "embeddings")
     work = run_dir("r23_hybrid")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     arriving = emb.filter(F.col("vec_id") < _HYB_NQ).withColumn(
         "g", F.expr("vec_id % 4")
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        arriving.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(arriving, os.path.join(work, "in"))
     return filesource.stream_hybrid_serving_run(
         spark,
         stage,
@@ -1616,30 +1508,10 @@ def r24_stream_scene_cuts(spark, sf_dir):
     partition overwrite — trivial because scene detection reads only
     each asset's own bytes). The final scene table must equal the
     batch video_scene_cuts bit for bit — same oracle."""
-    import shutil
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents")
     work = run_dir("r24_scenes")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
     arriving = docs.withColumn("g", F.expr("doc_id % 4"))
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        arriving.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
-    rp = os.path.join(stage, f"replay-{uuid.uuid4().hex[:8]}.parquet")
-    shutil.copy(os.path.join(stage, "f0.parquet"), rp)
-    os.utime(rp, (t0 + 40, t0 + 40))
+    stage = filesource.stage_arrivals(arriving, os.path.join(work, "in"))
     return filesource.stream_scene_cuts_run(
         spark,
         stage,

@@ -98,10 +98,10 @@ def compact_small_files(
     if n_out >= len(files):
         return 0
     df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".compact-staging"
-    df.repartition(n_out).write.mode("overwrite").parquet(staging)
+    compacted = path.rstrip("/") + ".compact-staging"
+    df.repartition(n_out).write.mode("overwrite").parquet(compacted)
     old = path.rstrip("/") + ".compact-old"
     os.rename(path, old)
-    os.rename(staging, path)
+    os.rename(compacted, path)
     shutil.rmtree(old)
     return n_out

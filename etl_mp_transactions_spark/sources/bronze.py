@@ -114,8 +114,8 @@ def build_bronze(
 
 
 # bump when the fixture derivation above changes — the staged parquet
-# cache below is keyed by it
-_BRONZE_FIXTURE_VERSION = "v1"
+# cache below is keyed by it (v2: completeness marked by _DONE)
+_BRONZE_FIXTURE_VERSION = "v2"
 
 
 def staged_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,10 +127,10 @@ def staged_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, bench — is a pure scan→flatten pipeline with the nesting
     shuffle paid zero times, not once per query run.
 
-    Concurrency-safe publish: build into a uuid-keyed temp dir, then
-    atomically rename into place; a concurrent loser just reads the
-    winner's copy. Content is a pure function of (orders, lineitem),
-    so any published copy is identical."""
+    Concurrency-safe publish through ``workdirs.publish_fixture``; a
+    concurrent loser reads the winner's copy. Content is a pure
+    function of (orders, lineitem), so any published copy is
+    identical."""
     return spark.read.parquet(staged_bronze_path(spark, sf_dir))
 
 
@@ -139,30 +139,20 @@ def staged_bronze_path(spark: SparkSession, sf_dir: str) -> str:
     for consumers that need the path itself (the declarative pipeline
     spec binds it as the extraction param)."""
     import os
-    import shutil
     import tempfile
-    import uuid
+
+    from etl_mp_transactions_spark.workdirs import publish_fixture
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"sg_bronze_{_BRONZE_FIXTURE_VERSION}_{sf_tag}",
+    return publish_fixture(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"sg_bronze_{_BRONZE_FIXTURE_VERSION}_{sf_tag}",
+        ),
+        lambda staging: build_bronze(spark, sf_dir)
+        .write.mode("overwrite")
+        .parquet(staging),
     )
-    marker = os.path.join(target, "_SUCCESS")
-    if not os.path.exists(marker):
-        staging = f"{target}.build-{uuid.uuid4().hex[:8]}"
-        build_bronze(spark, sf_dir).write.mode("overwrite").parquet(staging)
-        try:
-            os.rename(staging, target)
-        except OSError:
-            # lost the publish race (or a partial dir exists): keep the
-            # winner if it is complete, else replace it
-            if os.path.exists(marker):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                shutil.rmtree(target, ignore_errors=True)
-                os.rename(staging, target)
-    return target
 
 
 def _company_id():

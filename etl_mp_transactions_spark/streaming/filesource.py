@@ -493,42 +493,35 @@ def stage_events_as_files(
     return stage_dir
 
 
-# bump when the staging layout above changes (cache key below)
-_EVENTS_STAGE_VERSION = "v1"
+# bump when the staging layout above changes (cache key below;
+# v2: completeness marked by _DONE)
+_EVENTS_STAGE_VERSION = "v2"
 
 
 def staged_events_cached(
     spark: SparkSession, sf_dir: str, n_files: int = 4
 ) -> str:
     """Immutable staged copy of the events table, built once per
-    (SF, n_files, version) on this machine with an atomic-rename
-    publish — streaming queries stream FROM here (or file-copy from
-    here when they need a private mutable stage), so repeated
-    gate/bench runs pay the staging Spark job zero times instead of
-    once per query run. Content is a pure function of the source
-    table, so any published copy is identical."""
-    import shutil
+    (SF, n_files, version) on this machine by
+    ``workdirs.publish_fixture`` — streaming queries stream FROM here
+    (or file-copy from here when they need a private mutable stage),
+    so repeated gate/bench runs pay the staging Spark job zero times
+    instead of once per query run. Content is a pure function of the
+    source table, so any published copy is identical."""
     import tempfile
-    import uuid
+
+    from etl_mp_transactions_spark.workdirs import publish_fixture
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"sg_events_stage_{_EVENTS_STAGE_VERSION}_{sf_tag}_{n_files}",
+    return publish_fixture(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"sg_events_stage_{_EVENTS_STAGE_VERSION}_{sf_tag}_{n_files}",
+        ),
+        lambda staging: stage_events_as_files(
+            spark, sf_dir, staging, n_files=n_files
+        ),
     )
-    marker = os.path.join(target, "_SUCCESS")
-    if not os.path.exists(marker):
-        staging = f"{target}.build-{uuid.uuid4().hex[:8]}"
-        stage_events_as_files(spark, sf_dir, staging, n_files=n_files)
-        try:
-            os.rename(staging, target)
-        except OSError:
-            if os.path.exists(marker):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                shutil.rmtree(target, ignore_errors=True)
-                os.rename(staging, target)
-    return target
 
 
 def staged_event_batches_cached(
@@ -540,49 +533,82 @@ def staged_event_batches_cached(
     stream processes batch b exactly b-th — the precondition for an
     ORACLE-checkable watermark/late-data policy (the plain
     repartition staging above has no SQL-expressible row→file rule).
-    Atomic-rename publish like staged_events_cached."""
-    import shutil
+    Published like staged_events_cached."""
     import tempfile
-    import uuid
 
     from etl_mp_transactions_spark.sources.tables import load_table
+    from etl_mp_transactions_spark.workdirs import publish_fixture
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    target = os.path.join(
-        tempfile.gettempdir(),
-        f"sg_event_batches_{_EVENTS_STAGE_VERSION}_{sf_tag}_{n_batches}",
-    )
-    marker = os.path.join(target, "_DONE")
-    if not os.path.exists(marker):
-        staging = f"{target}.build-{uuid.uuid4().hex[:8]}"
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         for b in range(n_batches):
-            sub = os.path.join(staging, f"_b{b}")
-            (
-                ev.filter(F.col("event_id") % n_batches == b)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(sub)
+            write_single_file(
+                ev.filter(F.col("event_id") % n_batches == b),
+                os.path.join(staging, f"batch-{b:04d}.parquet"),
+                _ARRIVAL_T0 + b,
             )
-            part = [
-                f for f in os.listdir(sub) if f.endswith(".parquet")
-            ][0]
-            dst = os.path.join(staging, f"batch-{b:04d}.parquet")
-            shutil.move(os.path.join(sub, part), dst)
-            shutil.rmtree(sub, ignore_errors=True)
-            # strictly increasing mtimes fix the stream's file order
-            os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))
-        open(os.path.join(staging, "_DONE"), "w").close()
-        try:
-            os.rename(staging, target)
-        except OSError:
-            if os.path.exists(marker):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                shutil.rmtree(target, ignore_errors=True)
-                os.rename(staging, target)
-    return target
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    return publish_fixture(
+        os.path.join(
+            tempfile.gettempdir(),
+            f"sg_event_batches_{_EVENTS_STAGE_VERSION}_{sf_tag}_{n_batches}",
+        ),
+        build,
+    )
+
+
+# Arrival staging for the exactly-once file-stream runners: a fixed
+# epoch makes mtime order == batch order; the arriving rows come in
+# _ARRIVAL_GROUPS files, and the first is delivered a second time.
+_ARRIVAL_T0 = 1_700_000_000
+_ARRIVAL_GROUPS = 4
+
+
+def write_single_file(df: DataFrame, dst: str, mtime: int) -> None:
+    """Write ``df`` as the one parquet file ``dst`` stamped with
+    ``mtime``. Spark writes a directory of part files, so the frame
+    is coalesced to one partition, written into a hidden scratch dir
+    beside ``dst`` (the file source skips ``_`` names), and its one
+    part file is moved to ``dst``; the scratch dir is removed."""
+    import shutil
+
+    scratch = os.path.join(
+        os.path.dirname(dst), "_" + os.path.basename(dst)
+    )
+    df.coalesce(1).write.mode("overwrite").parquet(scratch)
+    part = next(
+        f for f in os.listdir(scratch)
+        if f.endswith(".parquet") and not f.startswith("_")
+    )
+    os.replace(os.path.join(scratch, part), dst)
+    shutil.rmtree(scratch)
+    os.utime(dst, (mtime, mtime))
+
+
+def stage_arrivals(arriving: DataFrame, stage_dir: str) -> str:
+    """Stage the input of an exactly-once stream runner and return
+    ``stage_dir``: the rows of ``arriving`` with ``g = 0..3`` become
+    ``f0.parquet`` .. ``f3.parquet`` (``g`` dropped), stamped
+    ``t0 + 10·g`` so a ``maxFilesPerTrigger=1`` stream makes one
+    micro-batch of each, in order; then a ``replay-<uuid8>.parquet``
+    copy of ``f0`` stamped ``t0 + 40`` arrives last — the re-delivered
+    file that must contribute zero rows."""
+    import shutil
+    import uuid
+
+    os.makedirs(stage_dir, exist_ok=True)
+    for g in range(_ARRIVAL_GROUPS):
+        write_single_file(
+            arriving.filter(F.col("g") == g).drop("g"),
+            os.path.join(stage_dir, f"f{g}.parquet"),
+            _ARRIVAL_T0 + 10 * g,
+        )
+    replay = os.path.join(stage_dir, f"replay-{uuid.uuid4().hex[:8]}.parquet")
+    shutil.copy(os.path.join(stage_dir, "f0.parquet"), replay)
+    t = _ARRIVAL_T0 + 10 * _ARRIVAL_GROUPS
+    os.utime(replay, (t, t))
+    return stage_dir
 
 
 def _read_batches(spark: SparkSession, root: str, schema: str) -> DataFrame:
@@ -594,6 +620,30 @@ def _read_batches(spark: SparkSession, root: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).parquet(root).select(
         *StructType.fromDDL(schema).fieldNames()
     )
+
+
+def read_ledger(
+    spark: SparkSession, root: str, schema: str, skip: int | None = None
+) -> DataFrame:
+    """The committed ``batch=<id>`` partitions under ``root`` (missing
+    root: none), read with the declared ``schema``; with ``skip``, all
+    but ``batch=<skip>``. Every other partition, ``batch=base`` and
+    ``batch=-1`` included, is kept. No partition: an empty frame of
+    exactly ``schema``.
+
+    This is the exactly-once step of every ``foreachBatch`` runner
+    below: a micro-batch anti-joins against the ledger minus its OWN
+    partition, so a re-executed batch id sees the state from before
+    its first attempt and rewrites byte-identical output."""
+    own = None if skip is None else f"batch={skip}"
+    dirs = [
+        os.path.join(root, d)
+        for d in sorted(os.listdir(root))
+        if d.startswith("batch=") and d != own
+    ] if os.path.isdir(root) else []
+    if not dirs:
+        return literal_frame(spark, [], schema)
+    return spark.read.schema(schema).parquet(*dirs)
 
 
 def stream_incremental_dedup_run(
@@ -634,16 +684,6 @@ def stream_incremental_dedup_run(
     """
     key_schema = "ch string"
 
-    def _seen_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(store_dir, d)
-            for d in sorted(os.listdir(store_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(store_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], key_schema)
-        return spark.read.schema(key_schema).parquet(*dirs)
-
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window
 
@@ -655,7 +695,9 @@ def stream_incremental_dedup_run(
             .drop("_rn")
         )
         new_rows = first.join(
-            F.broadcast(_seen_except(batch_id)), "ch", "left_anti"
+            F.broadcast(read_ledger(spark, store_dir, key_schema, batch_id)),
+            "ch",
+            "left_anti",
         ).localCheckpoint(eager=True)
         new_rows.select(
             "ch", F.col("doc_id").alias("canonical_doc_id")
@@ -732,18 +774,8 @@ def stream_neardup_index_run(
         " band_0 string, band_1 string"
     )
 
-    def _index_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(index_dir, d)
-            for d in sorted(os.listdir(index_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(index_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], idx_schema)
-        return spark.read.schema(idx_schema).parquet(*dirs)
-
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
-        old = _index_except(batch_id)
+        old = read_ledger(spark, index_dir, idx_schema, batch_id)
         fresh = batch_df.join(
             F.broadcast(old.select("doc_id").distinct()),
             "doc_id",
@@ -872,21 +904,12 @@ def stream_ivfpq_ingest_run(
     """
     from etl_mp_transactions_spark.operators import ivfpq as ivfpq_ops
 
-    def _indexed_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(index_dir, d)
-            for d in sorted(os.listdir(index_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(index_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], "vec_id long")
-        return spark.read.schema(
-            "vec_id long, cid long, pq_code long, distortion long"
-        ).parquet(*dirs).select("vec_id")
+    idx_schema = "vec_id long, cid long, pq_code long, distortion long"
 
     def encode_batch(batch_df: DataFrame, batch_id: int) -> None:
+        indexed = read_ledger(spark, index_dir, idx_schema, batch_id)
         fresh = batch_df.join(
-            _indexed_except(batch_id), "vec_id", "left_anti"
+            indexed.select("vec_id"), "vec_id", "left_anti"
         )
         _, packed = ivfpq_ops.encode_against_books(fresh, cb, pb)
         packed.select(
@@ -908,9 +931,7 @@ def stream_ivfpq_ingest_run(
         .start()
     )
     q.awaitTermination()
-    return _read_batches(
-        spark, index_dir, "vec_id long, cid long, pq_code long, distortion long"
-    )
+    return _read_batches(spark, index_dir, idx_schema)
 
 
 def stream_quality_gate_run(
@@ -937,19 +958,10 @@ def stream_quality_gate_run(
 
     out_schema = "doc_id long, lang string, x long, p_nano long, keep boolean"
 
-    def _scored_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(verdict_dir, d)
-            for d in sorted(os.listdir(verdict_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(verdict_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], "doc_id long")
-        return spark.read.schema(out_schema).parquet(*dirs).select("doc_id")
-
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
+        scored = read_ledger(spark, verdict_dir, out_schema, batch_id)
         fresh = batch_df.join(
-            _scored_except(batch_id), "doc_id", "left_anti"
+            scored.select("doc_id"), "doc_id", "left_anti"
         )
         score_against(fresh, lm, params).write.mode("overwrite").parquet(
             os.path.join(verdict_dir, f"batch={batch_id}")
@@ -1006,25 +1018,13 @@ def stream_rerank_serving_run(
     # parquet scan + quantize per batch (the r23 corpus-side pattern)
     vectors = vectors.localCheckpoint(eager=False)
 
-    def _served_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(out_dir, d)
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(out_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], "query_id long")
-        return (
-            spark.read.schema(out_schema).parquet(*dirs)
-            .select("query_id").distinct()
-        )
-
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
         qset = _quantized(batch_df, "vec_id").select(
             F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
         )
+        served = read_ledger(spark, out_dir, out_schema, batch_id)
         fresh = qset.join(
-            _served_except(batch_id), "query_id", "left_anti"
+            served.select("query_id").distinct(), "query_id", "left_anti"
         )
         rerank_exact(
             fresh, cb, pb, codes, vectors, k_neighbors
@@ -1063,19 +1063,11 @@ def stream_delete_tombstones_run(
     ``distinct()`` read (tombstones are a set union; deletes are
     idempotent by nature)."""
 
-    def _tombed_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(tomb_dir, d)
-            for d in sorted(os.listdir(tomb_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(tomb_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], "vec_id long")
-        return spark.read.schema("vec_id long").parquet(*dirs)
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         fresh = batch_df.select("vec_id").join(
-            _tombed_except(batch_id), "vec_id", "left_anti"
+            read_ledger(spark, tomb_dir, "vec_id long", batch_id),
+            "vec_id",
+            "left_anti",
         )
         fresh.write.mode("overwrite").parquet(
             os.path.join(tomb_dir, f"batch={batch_id}")
@@ -1146,25 +1138,13 @@ def stream_hybrid_serving_run(
         load_table(spark, sf_dir, "embeddings"), "vec_id"
     ).localCheckpoint(eager=False)
 
-    def _served_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(out_dir, d)
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(out_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], "query_id long")
-        return (
-            spark.read.schema(out_schema).parquet(*dirs)
-            .select("query_id").distinct()
-        )
-
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
         qset = _quantized(batch_df, "vec_id").select(
             F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
         )
+        served = read_ledger(spark, out_dir, out_schema, batch_id)
         fresh = qset.join(
-            _served_except(batch_id), "query_id", "left_anti"
+            served.select("query_id").distinct(), "query_id", "left_anti"
         )
         qids = fresh.select(F.col("query_id").alias("doc_id"))
         _fused(
@@ -1211,24 +1191,10 @@ def stream_scene_cuts_run(
         " n_frames long, intra_max_diff long"
     )
 
-    def _served_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(out_dir, d)
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(out_dir) else []
-        if not dirs:
-            return literal_frame(spark, [], "asset_id long")
-        return (
-            spark.read.schema(out_schema).parquet(*dirs)
-            .select("asset_id").distinct()
-        )
-
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
+        served = read_ledger(spark, out_dir, out_schema, batch_id)
         fresh = batch_df.join(
-            _served_except(batch_id).withColumnRenamed(
-                "asset_id", "doc_id"
-            ),
+            served.select(F.col("asset_id").alias("doc_id")).distinct(),
             "doc_id",
             "left_anti",
         )
@@ -1318,9 +1284,20 @@ def stream_graph_insert_run(
         base_emb, books, _GANN_NPROBE
     ).localCheckpoint(eager=False)
     batch_probes: dict[int, DataFrame] = {}
+    restored: DataFrame | None = None
 
-    def _probes_union(batch_id: int) -> DataFrame:
-        out = base_probes
+    def _probes_union(batch_id: int, prior: DataFrame) -> DataFrame:
+        # A restart from the checkpoint finds member batches that an
+        # earlier run committed on disk but not in batch_probes. At a
+        # run's first batch ``prior`` is exactly those batches (empty
+        # on a fresh state dir): assign them once, so later batches
+        # probe the same corpus an uninterrupted run would.
+        nonlocal restored
+        if restored is None:
+            restored = _probes_df(
+                prior, books, _GANN_NPROBE
+            ).localCheckpoint(eager=False)
+        out = base_probes.unionByName(restored)
         for b in sorted(batch_probes):
             if b != batch_id:
                 out = out.unionByName(batch_probes[b])
@@ -1334,18 +1311,8 @@ def stream_graph_insert_run(
         os.path.join(edges_dir, "batch=base")
     )
 
-    def _members_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(members_dir, d)
-            for d in sorted(os.listdir(members_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ]
-        if not dirs:
-            return literal_frame(spark, [], emb_schema)
-        return spark.read.schema(emb_schema).parquet(*dirs)
-
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _members_except(batch_id)
+        prior = read_ledger(spark, members_dir, emb_schema, batch_id)
         fresh = batch_df.select(
             "vec_id", "embedding", "label"
         ).join(prior.select("vec_id"), "vec_id", "left_anti")
@@ -1357,12 +1324,12 @@ def stream_graph_insert_run(
         )
         # assign this batch's survivors once; on foreachBatch
         # re-execution the entry is recomputed from the rewritten
-        # state file, mirroring _members_except's idempotence
+        # state file, mirroring the ledger read's idempotence
         fresh_probes = _probes_df(
             fresh, books, _GANN_NPROBE
         ).localCheckpoint(eager=False)
+        prior_probes = _probes_union(batch_id, prior)
         batch_probes[batch_id] = fresh_probes
-        prior_probes = _probes_union(batch_id)
         existing = base_emb.select(
             "vec_id", "embedding", "label"
         ).unionByName(prior)
@@ -1466,46 +1433,6 @@ def stream_graph_delete_run(
         os.path.join(frags_dir, "batch=base")
     )
 
-    def _read_all(root: str, schema: str) -> DataFrame:
-        dirs = [
-            os.path.join(root, d)
-            for d in sorted(os.listdir(root))
-            if d.startswith("batch=")
-        ]
-        if not dirs:
-            return literal_frame(spark, [], schema)
-        return spark.read.schema(schema).parquet(*dirs)
-
-    def _tombs_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(tombs_dir, d)
-            for d in sorted(os.listdir(tombs_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ]
-        if not dirs:
-            return literal_frame(spark, [], id_schema)
-        return spark.read.schema(id_schema).parquet(*dirs)
-
-    def _frags_except(batch_id: int) -> DataFrame:
-        # mirror of _tombs_except for the fragment store (ADVICE r14
-        # medium): on foreachBatch RE-EXECUTION after a crash between
-        # the fragment write and the checkpoint commit, a prior
-        # attempt's batch={batch_id} fragment already exists; if the
-        # affected-detection view read it, the already-repaired
-        # fragment would mask the pre-batch edges, detection would
-        # find nothing, and the repair would be overwritten EMPTY —
-        # silently losing edges. Excluding the current batch id makes
-        # maintain() idempotent: re-execution sees the true pre-batch
-        # state.
-        dirs = [
-            os.path.join(frags_dir, d)
-            for d in sorted(os.listdir(frags_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ]
-        if not dirs:
-            return literal_frame(spark, [], frag_schema)
-        return spark.read.schema(frag_schema).parquet(*dirs)
-
     def _view(frags: DataFrame, tombs: DataFrame) -> DataFrame:
         # latest fragment per src, minus tombstoned srcs AND dsts.
         # The dst filter matters for the empty-repair edge case: an
@@ -1532,7 +1459,7 @@ def stream_graph_delete_run(
         )
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        prior_tombs = _tombs_except(batch_id)
+        prior_tombs = read_ledger(spark, tombs_dir, id_schema, batch_id)
         fresh = batch_df.select("vec_id").join(
             prior_tombs, "vec_id", "left_anti"
         )
@@ -1549,8 +1476,15 @@ def stream_graph_delete_run(
         # node needs repair. Srcs tombstoned in this batch are
         # excluded (they leave the graph, no repair). Fragments from
         # a prior FAILED attempt of this same batch id are excluded
-        # too (_frags_except — re-execution idempotence).
-        view = _view(_frags_except(batch_id), prior_tombs)
+        # too: after a crash between the fragment write and the
+        # checkpoint commit, reading the already-repaired fragment
+        # would mask the pre-batch edges, detection would find
+        # nothing, and the repair would be overwritten EMPTY —
+        # silently losing edges.
+        view = _view(
+            read_ledger(spark, frags_dir, frag_schema, batch_id),
+            prior_tombs,
+        )
         affected = (
             view.join(
                 fresh.withColumnRenamed("vec_id", "dst"), "dst"
@@ -1607,8 +1541,8 @@ def stream_graph_delete_run(
     )
     q.awaitTermination()
     final = _view(
-        _read_all(frags_dir, frag_schema),
-        _read_all(tombs_dir, id_schema),
+        read_ledger(spark, frags_dir, frag_schema),
+        read_ledger(spark, tombs_dir, id_schema),
     )
     w = Window.partitionBy("src").orderBy("d2", "dst")
     return final.withColumn(

@@ -16,7 +16,8 @@ against concurrency: a live run's dir was created seconds-to-minutes
 ago, far under the 2h horizon, so only abandoned footprints are
 swept. Immutable machine-level caches (staged events/bronze/avro
 fixtures) intentionally do NOT live under this root — they are
-shared by design and publish via atomic rename.
+shared by design and published once per machine by
+`publish_fixture()`.
 """
 
 from __future__ import annotations
@@ -29,6 +30,39 @@ import uuid
 
 _ROOT = os.path.join(tempfile.gettempdir(), "sg_runs")
 _GC_AGE_S = 2 * 3600
+_DONE = "_DONE"
+
+
+def publish_fixture(target: str, build) -> str:
+    """Publish the immutable fixture dir ``target`` once per machine
+    and return it. ``build(staging)`` fills a private
+    ``<target>.build-<uuid>`` dir (it exists when ``build`` is
+    called); a ``_DONE`` marker is written after ``build`` returns,
+    then the dir is renamed into place. A concurrent loser keeps the
+    winner's copy when it carries the marker, and replaces an
+    unmarked (partial) target. A ``build`` that raises leaves no
+    staging dir behind. The content must be a pure function of the
+    target's key, so any published copy is identical."""
+    marker = os.path.join(target, _DONE)
+    if os.path.exists(marker):
+        return target
+    staging = f"{target}.build-{uuid.uuid4().hex[:8]}"
+    os.makedirs(staging)
+    try:
+        build(staging)
+        open(os.path.join(staging, _DONE), "w").close()
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    try:
+        os.rename(staging, target)
+    except OSError:
+        if os.path.exists(marker):
+            shutil.rmtree(staging, ignore_errors=True)
+        else:
+            shutil.rmtree(target, ignore_errors=True)
+            os.rename(staging, target)
+    return target
 
 
 def run_dir(prefix: str) -> str:

@@ -33,6 +33,7 @@ def sf_dir():
 _SLOW_TESTS = {
     "test_graphann.py::test_stream_graph_delete_reexecution_idempotent",
     "test_graphann.py::test_stream_graph_delete_equals_batch",
+    "test_graphann.py::test_stream_graph_insert_restart_equals_uninterrupted",
     "test_graphann.py::test_routed_walk_enters_near_and_converges_no_later",
     "test_r7_invariance.py::test_partition_invariance_r7[k1_silver_roundtrip]",
     "test_date_property.py::test_spark_matches_reference_python",

@@ -313,14 +313,13 @@ def test_stream_graph_delete_reexecution_idempotent(
     Streaming re-executes those batches against their own existing
     fragments (exactly the crash window; a FULL re-run with a fresh
     checkpoint over old multi-batch state is NOT a scenario the
-    engine produces — commits are monotone). Without the
-    _frags_except fix, the already-repaired fragment masks the
-    pre-batch edges, detection finds nothing, and the repair is
-    overwritten empty — the final view silently loses edges. With
-    it, the re-executed batch rewrites an identical fragment and the
-    final view still equals the batch oracle."""
+    engine produces — commits are monotone). If the fragment read
+    kept the batch's own id, the already-repaired fragment would mask
+    the pre-batch edges, detection would find nothing, and the repair
+    would be overwritten empty — the final view silently loses edges.
+    Leaving it out, the re-executed batch rewrites an identical
+    fragment and the final view still equals the batch oracle."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -340,18 +339,11 @@ def test_stream_graph_delete_reexecution_idempotent(
     )
     t0 = 1700000000
     for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        tombs.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f
-            for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
+        filesource.write_single_file(
+            tombs.filter(F.col("g") == g).drop("g"),
+            os.path.join(stage, f"f{g}.parquet"),
+            t0 + 10 * g,
         )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
     books = gann_books(emb)
     state = os.path.join(work, "state")
     ckpt = os.path.join(work, "ckpt")
@@ -386,6 +378,64 @@ def test_stream_graph_delete_reexecution_idempotent(
     }
     assert first_rows == batch and len(batch) > 0
     assert second_rows == batch
+
+
+def test_stream_graph_insert_restart_equals_uninterrupted(
+    spark, sf_dir, tmp_path
+):
+    """r25 resumed from its checkpoint: stop after two of the four
+    arriving files, add the other two, and run again on the same
+    checkpoint and state. The member batches of the first
+    run are on disk but were never probed by the second; unless their
+    probes are rebuilt, the resumed batches build their fragments
+    against the base probes only and silently drop the edges between
+    old and new arrivals. The result must equal one uninterrupted
+    run over all four files."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from etl_mp_transactions_spark.queries.graphann import (
+        _BASE_PRED,
+        gann_books,
+    )
+    from etl_mp_transactions_spark.streaming import filesource
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    base = emb.filter(F.expr(_BASE_PRED))
+    books = gann_books(base)
+    arriving = emb.filter(~F.expr(_BASE_PRED)).withColumn(
+        "g", F.expr("(vec_id div 10) % 4")
+    )
+
+    def arrive(stage, groups):
+        os.makedirs(stage, exist_ok=True)
+        for g in groups:
+            filesource.write_single_file(
+                arriving.filter(F.col("g") == g).drop("g"),
+                os.path.join(stage, f"f{g}.parquet"),
+                1700000000 + 10 * g,
+            )
+
+    def run(work):
+        out = filesource.stream_graph_insert_run(
+            spark,
+            os.path.join(work, "in"),
+            os.path.join(work, "ckpt"),
+            os.path.join(work, "state"),
+            base,
+            books,
+        )
+        return {(r.src, r.dst, r.rnk) for r in out.collect()}
+
+    once = str(tmp_path / "once")
+    arrive(os.path.join(once, "in"), range(4))
+    want = run(once)
+    resumed = str(tmp_path / "resumed")
+    arrive(os.path.join(resumed, "in"), [0, 1])
+    run(resumed)
+    arrive(os.path.join(resumed, "in"), [2, 3])
+    assert run(resumed) == want and len(want) > 0
 
 
 def test_routed_walk_enters_near_and_converges_no_later(spark, sf_dir):

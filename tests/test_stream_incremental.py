@@ -13,6 +13,7 @@ from etl_mp_transactions_spark.sources.tables import load_table
 from etl_mp_transactions_spark.streaming.filesource import (
     bootstrap_seen_store,
     stream_incremental_dedup_run,
+    write_single_file,
 )
 
 
@@ -23,18 +24,11 @@ def _stage_docs(spark, sf_dir, stage, groups, t0=1700000000):
     )
     os.makedirs(stage, exist_ok=True)
     for i, g in enumerate(groups):
-        tmp = os.path.join(stage, f"..tmp{g}")
-        newd.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
+        write_single_file(
+            newd.filter(F.col("g") == g).drop("g"),
+            os.path.join(stage, f"f{g}.parquet"),
+            t0 + 10 * i,
         )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
     return docs
 
 
