@@ -44,10 +44,12 @@ CASE — semantics with NO session-config surface in Spark OR DuckDB
 decimal semantics vary with spark.sql.ansi.enabled /
 decimalOperations.allowPrecisionLoss — the one environment-dependent
 piece left in the chain, and the prime suspect for the driver-red
-``quality_classifier_poscontrol``; the retired 128-bit chain is kept
-below ONLY as the ``cramer_probe_decimal128`` driver diagnostic).
-tests/test_cramer_exact.py drives both chains through all three
-engines on adversarial operands under both ANSI modes.
+``quality_classifier_poscontrol``; that 128-bit chain and its
+``cramer_probe_decimal128`` diagnostic are retired, the HUGEINT cause
+being fixed at registration and pinned by
+tests/test_r16_attested_types.py). tests/test_cramer_exact.py drives
+the int64 chain through all three engines on adversarial operands
+under both ANSI modes.
 
 Scale: rows are pre-grouped by (x, y) — the feature is an integer
 band / bit-length with a bounded (≤ ~64-value) domain, so training
@@ -150,80 +152,10 @@ _ROWS_G_CTE = (
 )
 
 
-def _cramer_stages(div: str, huge: str) -> list[list[str]]:
-    """RETIRED 128-bit Cramer chain (r12) — NOT used by any training
-    path since r14. Kept verbatim solely as the driver-side
-    diagnostic ``cramer_probe_decimal128`` (quality_clf.py): pushed
-    over constant literals it attests whether DuckDB HUGEINT
-    (div='//') and Spark DECIMAL(38,0) (div='div') agree in the
-    DRIVER environment — a red cell there, with the i64 chain green,
-    pins three rounds of poscontrol divergence on 128-bit type
-    semantics (ANSI / precision-loss config) rather than data. The
-    live solve is functions/i128.py:cramer_i64_stages.
-
-    Headroom (closes the r13 DECIMAL-overflow advice): the probe's
-    operands are CONSTANT LITERALS (|num|·1000 ≤ ~1e22, 16 orders
-    inside DECIMAL(38)/HUGEINT), so the data-dependent ~N² overflow
-    the advice described cannot occur here; the live training path's
-    headroom is the loud 2^61 SUM_GUARD below, which fires before
-    any solve arithmetic sees oversized sums."""
-
-    def _h(e: str) -> str:
-        return f"CAST({e} AS {huge})"
-
-    return [
-        # num0/num1/den: 128-bit exact cross products of the BIGINT sums
-        [
-            f"{_h('g0')} * h11 - {_h('g1')} * h01 AS num0",
-            f"{_h('g1')} * h00 - {_h('g0')} * h01 AS num1",
-            f"{_h('h00')} * h11 - {_h('h01')} * h01 AS den",
-        ],
-        # digit 1 of base-1000 long division of |num|·1e9 by den
-        [
-            "CASE WHEN num0 < 0 THEN -1 ELSE 1 END AS sg0",
-            "CASE WHEN num1 < 0 THEN -1 ELSE 1 END AS sg1",
-            f"(abs(num0) * 1000) {div} den AS qa1",
-            f"(abs(num1) * 1000) {div} den AS qb1",
-        ],
-        [
-            "abs(num0) * 1000 - qa1 * den AS ma1",
-            "abs(num1) * 1000 - qb1 * den AS mb1",
-        ],
-        # digit 2
-        [
-            f"(ma1 * 1000) {div} den AS qa2",
-            f"(mb1 * 1000) {div} den AS qb2",
-        ],
-        [
-            "ma1 * 1000 - qa2 * den AS ma2",
-            "mb1 * 1000 - qb2 * den AS mb2",
-        ],
-        # digit 3
-        [
-            f"(ma2 * 1000) {div} den AS qa3",
-            f"(mb2 * 1000) {div} den AS qb3",
-        ],
-        # recompose + round-half-away on the exact remainder
-        [
-            "CAST(pb0 + sg0 * (qa1 * 1000000 + qa2 * 1000 + qa3"
-            " + CASE WHEN 2 * (ma2 * 1000 - qa3 * den) >= den"
-            " THEN 1 ELSE 0 END) AS BIGINT) AS b0",
-            "CAST(pb1 + sg1 * (qb1 * 1000000 + qb2 * 1000 + qb3"
-            " + CASE WHEN 2 * (mb2 * 1000 - qb3 * den) >= den"
-            " THEN 1 ELSE 0 END) AS BIGINT) AS b1",
-            "g0",
-            "g1",
-            "h00",
-            "h01",
-            "h11",
-        ],
-    ]
-
-
 def cramer_update_py(num: int, den: int) -> int:
-    """Python twin of the RETIRED 128-bit chain (exact round-half-
-    away of 1e9·num/den, den > 0) — kept for the decimal128 probe and
-    the exactness cross-checks; the live twin is i128.delta_py."""
+    """Exact round-half-away of 1e9·num/den (den > 0), the Python
+    twin of the retired 128-bit chain — kept as the exact-rational
+    reference of the cross-checks; the live twin is i128.delta_py."""
     q, r = divmod(abs(num) * 10**9, den)
     if 2 * r >= den:
         q += 1
@@ -457,18 +389,6 @@ def logistic_newton_steps(spark, sf_dir):
 # task #3 insurance: rules out numeric type-canonicalization in the
 # driver's value hash as a cause).
 
-# retired-chain probe operands: its documented domain (den > 0,
-# 128-bit-safe magnitudes) — drawn from the r12 adversarial test set
-DEC128_PROBE_CASES = [
-    (0, 0, 1, 0, 2_000_000_000, 0, 1),
-    (0, 0, -1, 0, 2_000_000_000, 0, 1),
-    (0, 0, 0, 0, 7, 0, 13),
-    (0, 0, 10**15, -(10**15) + 7, 3 * 10**14, 10**13, 2 * 10**17),
-    (0, 0, -(10**15), 10**14 + 3, 10**14, -(10**12), 10**17),
-    (0, 0, 999_999_937, -31, 3, 1, 17),
-    (0, 0, 3, -3, 10**9, 0, 10**9),
-]
-
 _PROBE_SCHEMA = (
     "rid BIGINT, pb0 BIGINT, pb1 BIGINT, g0 BIGINT, g1 BIGINT,"
     " h00 BIGINT, h01 BIGINT, h11 BIGINT"
@@ -526,26 +446,6 @@ def cramer_probe(spark, sf_dir):
     extraordinary); green = the solve is attested engine-identical at
     the driver, independent of any data."""
     return _probe_spark(spark, cramer_i64_stages("div"), PROBE_CASES)
-
-
-@query(
-    "cramer_probe_decimal128",
-    _probe_oracle(
-        _cramer_stages("//", "HUGEINT"), DEC128_PROBE_CASES
-    ),
-)
-def cramer_probe_decimal128(spark, sf_dir):
-    """RETIRED-chain diagnostic probe: the r12 HUGEINT/DECIMAL(38,0)
-    long-division chain over constant literals. This arithmetic is NO
-    LONGER used by any training path — the probe exists to make the
-    driver explain three rounds of poscontrol red: red here (with
-    ``cramer_probe`` green) pins the historical divergence on 128-bit
-    type semantics in the driver environment (Spark ANSI /
-    decimal-precision session config, DuckDB HUGEINT build) — exactly
-    the hypothesis the r14 i64 rewrite removes."""
-    return _probe_spark(
-        spark, _cramer_stages("div", "DECIMAL(38,0)"), DEC128_PROBE_CASES
-    )
 
 
 # deci-z quantization + grid-join probe: exact tie points at the

@@ -23,9 +23,6 @@ from pyspark.sql import functions as F
 
 from etl_mp_transactions_spark.operators import multimodal
 from etl_mp_transactions_spark.streaming import filesource
-from etl_mp_transactions_spark.streaming.filesource import (
-    scaled_state_partitions as _scaled_parts,
-)
 from etl_mp_transactions_spark.registry import query
 from etl_mp_transactions_spark.sources.tables import load_table
 from etl_mp_transactions_spark.workdirs import publish_fixture, run_dir
@@ -193,8 +190,7 @@ def r1_stream_dedup(spark, sf_dir):
         os.path.join(stage, part), os.path.join(stage, f"replay-{uuid.uuid4().hex}.parquet")
     )
     out = stream_dedup_run(
-        spark, stage, os.path.join(work, "ckpt"), os.path.join(work, "out"),
-        key="event_id",
+        spark, stage, os.path.join(work, "ckpt"), os.path.join(work, "out")
     )
     return out.select("event_id", "user_id", "event_type")
 
@@ -217,8 +213,6 @@ def r6_stream_tumbling(spark, sf_dir):
     — the result must equal the batch/SQL aggregation bit-for-bit.
     The production append-mode variant (watermark-finalized windows
     only) is exercised in tests/test_streaming.py."""
-    import uuid
-
     from etl_mp_transactions_spark.streaming.filesource import (
         staged_events_cached,
         stream_windowed_counts_run,
@@ -227,11 +221,7 @@ def r6_stream_tumbling(spark, sf_dir):
     work = run_dir("stream_win")
     stage = staged_events_cached(spark, sf_dir, n_files=4)
     return stream_windowed_counts_run(
-        spark,
-        stage,
-        os.path.join(work, "ckpt"),
-        out_table=f"r6_win_{uuid.uuid4().hex[:8]}",
-        output_mode="complete",
+        spark, stage, os.path.join(work, "ckpt"), output_mode="complete"
     )
 
 
@@ -303,8 +293,6 @@ def r8_stream_session(spark, sf_dir):
     sessionization. Cross-micro-batch session merging is the property
     under test: a user's session split across files must come out as
     one row."""
-    import uuid
-
     from etl_mp_transactions_spark.streaming.filesource import (
         staged_events_cached,
         stream_session_counts_run,
@@ -313,11 +301,7 @@ def r8_stream_session(spark, sf_dir):
     work = run_dir("stream_sess")
     stage = staged_events_cached(spark, sf_dir, n_files=4)
     return stream_session_counts_run(
-        spark,
-        stage,
-        os.path.join(work, "ckpt"),
-        out_table=f"r8_sess_{uuid.uuid4().hex[:8]}",
-        output_mode="complete",
+        spark, stage, os.path.join(work, "ckpt"), output_mode="complete"
     )
 
 
@@ -487,8 +471,6 @@ def r11_stream_sliding(spark, sf_dir):
     stream==batch==SQL, the same pin family as r6_stream_tumbling;
     the oracle materializes both bucket offsets per event explicitly
     (the window_sliding formulation)."""
-    import uuid
-
     from etl_mp_transactions_spark.streaming.filesource import (
         staged_events_cached,
         stream_sliding_counts_run,
@@ -497,11 +479,7 @@ def r11_stream_sliding(spark, sf_dir):
     work = run_dir("stream_slide")
     stage = staged_events_cached(spark, sf_dir, n_files=4)
     return stream_sliding_counts_run(
-        spark,
-        stage,
-        os.path.join(work, "ckpt"),
-        out_table=f"r11_slide_{uuid.uuid4().hex[:8]}",
-        output_mode="complete",
+        spark, stage, os.path.join(work, "ckpt"), output_mode="complete"
     )
 
 
@@ -575,8 +553,6 @@ def r12_stream_static_enrich(spark, sf_dir):
     (the reference's per-row BigQuery lookups, SURVEY.md §1.3,
     re-expressed as one declarative join). Complete-mode aggregation
     per segment == the batch join+agg exactly."""
-    import uuid
-
     from etl_mp_transactions_spark.sources.tables import load_table as _lt
     from etl_mp_transactions_spark.streaming.filesource import (
         staged_events_cached,
@@ -600,18 +576,9 @@ def r12_stream_static_enrich(spark, sf_dir):
             .alias("total_value"),
         )
     )
-    table = f"r12_enrich_{uuid.uuid4().hex[:8]}"
-    with _scaled_parts(spark, stage):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    return filesource.run_to_memory(
+        agg, stage, os.path.join(work, "ckpt"), "complete"
+    )
 
 
 @query(
@@ -634,8 +601,6 @@ def r13_stream_custom_state(spark, sf_dir):
     the final accumulated row per user (max n_events) must equal the
     batch groupBy exactly — integer cents make the cross-batch
     accumulation order-free."""
-    import uuid
-
     from pyspark.sql import Window as W
 
     from etl_mp_transactions_spark.streaming.filesource import (
@@ -647,26 +612,15 @@ def r13_stream_custom_state(spark, sf_dir):
         running_user_totals_cents,
     )
 
-    from etl_mp_transactions_spark.streaming.filesource import (
-        scaled_state_partitions,
-    )
-
     work = run_dir("stream_custom_state")
     stage = staged_events_cached(spark, sf_dir, n_files=4)
     stream = stream_files_available_now(spark, stage, schema=_events_schema())
-    out = running_user_totals_cents(stream)
-    table = f"r13_state_{uuid.uuid4().hex[:8]}"
-    with scaled_state_partitions(spark, stage):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emissions = spark.table(table)
+    emissions = filesource.run_to_memory(
+        running_user_totals_cents(stream),
+        stage,
+        os.path.join(work, "ckpt"),
+        "update",
+    )
     rn = F.row_number().over(
         W.partitionBy("user_id").orderBy(F.desc("n_events"))
     )
@@ -728,8 +682,6 @@ def r14_stream_late_drop(spark, sf_dir):
     with the naive <= b-1 rule under-keeps by ~2.5k rows at sf0.01).
     Counts per key are monotone across updates, so the final
     accumulated row per (day, type) is the max-n emission."""
-    import uuid
-
     from pyspark.sql import Window as W
 
     from etl_mp_transactions_spark.streaming.filesource import (
@@ -762,18 +714,9 @@ def r14_stream_late_drop(spark, sf_dir):
             "cents",
         )
     )
-    table = f"r14_late_{uuid.uuid4().hex[:8]}"
-    with _scaled_parts(spark, stage):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emissions = spark.table(table)
+    emissions = filesource.run_to_memory(
+        agg, stage, os.path.join(work, "ckpt"), "update"
+    )
     rn = F.row_number().over(
         W.partitionBy("day", "event_type").orderBy(F.desc("n"))
     )
@@ -807,7 +750,6 @@ def r15_kappa_backfill_union(spark, sf_dir):
     mergeable (count/sum over integer cents), so where the
     batch/stream boundary falls cannot change the answer."""
     import shutil
-    import uuid
 
     from etl_mp_transactions_spark.streaming.filesource import (
         _events_schema,
@@ -840,19 +782,9 @@ def r15_kappa_backfill_union(spark, sf_dir):
         spark, tail_dir, schema=_events_schema()
     )
     work = run_dir("kappa_backfill")
-    table = f"r15_tail_{uuid.uuid4().hex[:8]}"
-    with _scaled_parts(spark, tail_dir):
-        q = (
-            agg(tail_stream)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    tail = spark.table(table)
+    tail = filesource.run_to_memory(
+        agg(tail_stream), tail_dir, os.path.join(work, "ckpt"), "complete"
+    )
     return (
         history.unionAll(tail)
         .groupBy("event_type")
@@ -973,7 +905,6 @@ def r16_stream_dedup_bounded_state(spark, sf_dir):
         stage,
         os.path.join(work, "ckpt"),
         os.path.join(work, "out"),
-        key="event_id",
         within_watermark=True,
     )
     return out.select("event_id", "user_id", "event_type")
@@ -1126,7 +1057,6 @@ def r18_stream_neardup_index(spark, sf_dir):
         os.path.join(work, "ckpt"),
         os.path.join(work, "out"),
         index_dir,
-        threshold=0.9,
     )
     return out.orderBy("doc_id")
 

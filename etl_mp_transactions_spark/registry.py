@@ -237,8 +237,10 @@ _SPOTLIGHT[_SPOTLIGHT.index("graph_ann_greedy_search")] = (
 # driver's per-query hash names the first diverging step itself;
 # (b) the two constant-literal arithmetic probes (data-independent:
 # VALUES only, no table scan) plus the retired-128-bit diagnostic
-# probe; (c) the r13 flagship families get driver attestation
-# (IVF-seeded graph build, streaming graph insert). Displaced (all
+# probe, whose slot went to stats_via_sums in r15 (the probe itself
+# is retired: its HUGEINT question is answered at registration);
+# (c) the r13 flagship families get driver attestation (IVF-seeded
+# graph build, streaming graph insert). Displaced (all
 # driver-green 2+ rounds, every family still represented in the
 # window): hybrid_rrf_fusion (hybrid_mmr_rerank stays),
 # ivfpq_delete_serve + ivfpq_upsert_serve (5 ivfpq entries stay),
@@ -252,7 +254,7 @@ for _old, _new in [
     ("ivfpq_delete_serve", "quality_classifier_poscontrol_step2"),
     ("ivfpq_upsert_serve", "quality_classifier_poscontrol_step3"),
     ("video_scene_cuts", "cramer_probe"),
-    ("dedup_incremental_new_vs_old", "cramer_probe_decimal128"),
+    ("dedup_incremental_new_vs_old", "stats_via_sums"),
     ("embedding_neardup", "sigmoid_grid_probe"),
     ("j2_tfidf_exact_pairs", "graph_ann_ivf_build"),
     ("q17_avg_subquery", "r25_stream_graph_insert"),
@@ -280,8 +282,8 @@ for _old, _new in [
 # (c) per VERDICT #3 the displaced ivfpq_train_gain returns.
 # Displaced (all driver-green in r14, families still represented):
 # step1/2/3 (trajectory + docx + calibration stay),
-# cramer_probe_decimal128 + sigmoid_grid_probe (cramer_probe stays —
-# both probes proved their point driver-green in r14),
+# sigmoid_grid_probe (cramer_probe stays — both probes proved their
+# point driver-green in r14),
 # graph_ann_build_flat_equiv (equivalence pinned r14; 4 graph/stream
 # graph entries stay), viterbi_em_train (duplicate_maximal_spans
 # stays; also the single most expensive spotlight entry — VERDICT #5
@@ -293,7 +295,6 @@ for _old, _new in [
      "quality_classifier_poscontrol_varchar"),
     ("quality_classifier_poscontrol_step3",
      "conformal_prediction_interval"),
-    ("cramer_probe_decimal128", "stats_via_sums"),
     ("sigmoid_grid_probe", "association_rules"),
     ("graph_ann_build_flat_equiv", "woe_information_value"),
     ("viterbi_em_train", "ivfpq_train_gain"),

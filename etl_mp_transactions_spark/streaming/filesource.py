@@ -15,6 +15,16 @@ Reference semantics → Spark:
   are transactional per micro-batch.
 - R5 sink batching: trigger cadence + ``foreachBatch``.
 
+One driver runs every stream of the package: ``_drain`` sets the
+checkpoint, starts with ``Trigger.AvailableNow`` and blocks until the
+input is consumed. ``run_available_now_to_parquet`` (file sink),
+``run_per_file`` (``maxFilesPerTrigger=1`` into ``foreachBatch``),
+``run_to_memory`` (memory sink) and ``stateful.run_stateful`` call
+it, and ``stream_files_available_now`` is the one streaming reader.
+The ``foreachBatch`` runners keep their per-batch output in a ledger
+of ``batch=<id>`` partitions: ``write_ledger`` commits one,
+``read_ledger`` reads the others back.
+
 At scale: state for dropDuplicates is partitioned by key across the
 cluster; unbounded key-history should switch to
 ``dropDuplicatesWithinWatermark`` to bound state (both shown here).
@@ -24,6 +34,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,16 +43,28 @@ from pyspark.sql.types import StructType
 from etl_mp_transactions_spark.functions.literalframe import literal_frame
 from etl_mp_transactions_spark.sources.tables import SCHEMAS
 
+# Settings no caller varies: the dedup and upsert keys, the event-time
+# shapes of the windowed/sliding/session runners (one watermark for
+# all three), the near-dup verify threshold and the re-rank depth.
+_DEDUP_KEY = "event_id"
+_UPSERT_KEY = "user_id"
+_WINDOW = "1 hour"
+_SLIDE = "30 minutes"
+_SESSION_GAP = "30 minutes"
+_WATERMARK = "2 hours"
+_NEARDUP_THRESHOLD = 0.9
+_RERANK_K = 5
+
 
 def stream_files_available_now(
     spark: SparkSession,
     src_dir: str,
     schema=None,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a directory (the GCS-bucket analog)."""
-    reader = spark.readStream.format(fmt)
+    """Parquet file-source stream over a directory (the GCS-bucket
+    analog)."""
+    reader = spark.readStream.format("parquet")
     if schema is not None:
         reader = reader.schema(schema)
     if max_files_per_trigger:
@@ -49,23 +72,60 @@ def stream_files_available_now(
     return reader.load(src_dir)
 
 
+def _drain(writer, checkpoint_dir: str) -> None:
+    """Run ``writer`` (a configured ``DataStreamWriter``) as one
+    AvailableNow pass recorded in ``checkpoint_dir``, and block until
+    it has consumed everything staged."""
+    writer.option("checkpointLocation", checkpoint_dir).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+
+
 def run_available_now_to_parquet(
     df: DataFrame, checkpoint_dir: str, out_dir: str, partition_by: list[str] | None = None
 ) -> DataFrame:
     """Shared sink pattern: one AvailableNow pass appending to a
     parquet sink (checkpoint-recoverable), returning the accumulated
-    output. Used by dedup, windowed, funnel, and silver streams."""
-    writer = (
-        df.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+    output. Used by the dedup, funnel and silver streams."""
+    writer = df.writeStream.format("parquet").outputMode("append").option(
+        "path", out_dir
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain(writer, checkpoint_dir)
     return df.sparkSession.read.parquet(out_dir)
+
+
+def run_per_file(
+    spark: SparkSession, src_dir: str, schema, checkpoint_dir: str, fn
+) -> None:
+    """One micro-batch per file under ``src_dir`` (read with
+    ``schema``, in modification-time order), each handed to
+    ``fn(batch_df, batch_id)``: the per-notification loop of the
+    reference, run as one AvailableNow pass."""
+    stream = stream_files_available_now(
+        spark, src_dir, schema, max_files_per_trigger=1
+    )
+    _drain(stream.writeStream.foreachBatch(fn), checkpoint_dir)
+
+
+def run_to_memory(
+    df: DataFrame, src_dir: str, checkpoint_dir: str, output_mode: str
+) -> DataFrame:
+    """Run the stateful stream ``df`` over the files staged in
+    ``src_dir`` into a memory sink under a fresh query name, with its
+    state partitions sized from those files, and return the sink's
+    table."""
+    spark = df.sparkSession
+    name = f"mem_{uuid.uuid4().hex}"
+    with scaled_state_partitions(spark, src_dir):
+        _drain(
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode),
+            checkpoint_dir,
+        )
+    return spark.table(name)
 
 
 def _staged_bytes(
@@ -168,13 +228,12 @@ def stream_dedup_run(
     src_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    key: str = "event_id",
     within_watermark: bool = False,
 ) -> DataFrame:
     """Run one AvailableNow pass: read files → exactly-once dedup on
-    `key` → append to a parquet sink (a file sink, unlike the memory
-    sink, supports checkpoint recovery — and is the realistic K1
-    shape). Returns the accumulated output. Re-running with the same
+    ``event_id`` → append to a parquet sink (a file sink, unlike the
+    memory sink, supports checkpoint recovery — and is the realistic
+    K1 shape). Returns the accumulated output. Re-running with the same
     checkpoint after re-adding an already-seen file appends 0 new rows
     (the R1 replay contract — tested in tests/test_streaming.py)."""
     stream = stream_files_available_now(spark, src_dir, schema=_events_schema())
@@ -185,21 +244,28 @@ def stream_dedup_run(
         deduped = (
             stream.withColumn("ts", F.col("ts").cast("timestamp"))
             .withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark([key])
+            .dropDuplicatesWithinWatermark([_DEDUP_KEY])
         )
     else:
-        deduped = stream.dropDuplicates([key])
+        deduped = stream.dropDuplicates([_DEDUP_KEY])
     with scaled_state_partitions(spark, src_dir):
         return run_available_now_to_parquet(deduped, checkpoint_dir, out_dir)
+
+
+def _watermarked_events(spark: SparkSession, src_dir: str) -> DataFrame:
+    """The staged events as a stream with a ``_WATERMARK`` watermark on
+    ``ts``. Watermarks require TIMESTAMP (with-timezone); the session
+    TZ is UTC, so the ntz→ltz cast is instant-preserving."""
+    stream = stream_files_available_now(spark, src_dir, schema=_events_schema())
+    return stream.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
+        "ts", _WATERMARK
+    )
 
 
 def stream_windowed_counts_run(
     spark: SparkSession,
     src_dir: str,
     checkpoint_dir: str,
-    out_table: str = "stream_window_out",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
     output_mode: str = "append",
 ) -> DataFrame:
     """Watermarked tumbling-window aggregation over the event stream —
@@ -211,13 +277,9 @@ def stream_windowed_counts_run(
     are withheld at end-of-stream); 'complete' re-emits every window,
     which makes a finite AvailableNow run equal the batch aggregation
     exactly — the mode the oracle-checked registry entry uses."""
-    stream = stream_files_available_now(spark, src_dir, schema=_events_schema())
-    # watermarks require TIMESTAMP (with-timezone); session TZ is UTC so
-    # the ntz→ltz cast is instant-preserving
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("event_type"))
+        _watermarked_events(spark, src_dir)
+        .groupBy(F.window("ts", _WINDOW), F.col("event_type"))
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)"))
@@ -231,27 +293,13 @@ def stream_windowed_counts_run(
             "total_value",
         )
     )
-    with scaled_state_partitions(spark, src_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(out_table)
+    return run_to_memory(agg, src_dir, checkpoint_dir, output_mode)
 
 
 def stream_sliding_counts_run(
     spark: SparkSession,
     src_dir: str,
     checkpoint_dir: str,
-    out_table: str = "stream_sliding_out",
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
     output_mode: str = "complete",
 ) -> DataFrame:
     """Watermarked SLIDING-window aggregation over the event stream —
@@ -261,11 +309,9 @@ def stream_sliding_counts_run(
     run equal the batch aggregation exactly; the per-event fan-out to
     overlapping windows happens inside Spark's stateful window
     operator, not by materializing duplicate rows."""
-    stream = stream_files_available_now(spark, src_dir, schema=_events_schema())
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide))
+        _watermarked_events(spark, src_dir)
+        .groupBy(F.window("ts", _WINDOW, _SLIDE))
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)"))
@@ -278,26 +324,13 @@ def stream_sliding_counts_run(
             "total_value",
         )
     )
-    with scaled_state_partitions(spark, src_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(out_table)
+    return run_to_memory(agg, src_dir, checkpoint_dir, output_mode)
 
 
 def stream_session_counts_run(
     spark: SparkSession,
     src_dir: str,
     checkpoint_dir: str,
-    out_table: str = "stream_session_out",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
     output_mode: str = "complete",
 ) -> DataFrame:
     """Watermarked session-window aggregation over the event stream —
@@ -311,11 +344,9 @@ def stream_session_counts_run(
     only) is the production shape; sessions still open at end-of-
     stream are withheld there, so it is exercised in tests, not the
     oracle entry."""
-    stream = stream_files_available_now(spark, src_dir, schema=_events_schema())
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("user_id"), F.session_window("ts", gap))
+        _watermarked_events(spark, src_dir)
+        .groupBy(F.col("user_id"), F.session_window("ts", _SESSION_GAP))
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -323,17 +354,7 @@ def stream_session_counts_run(
             "n_events",
         )
     )
-    with scaled_state_partitions(spark, src_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(out_table)
+    return run_to_memory(agg, src_dir, checkpoint_dir, output_mode)
 
 
 def stream_continuous_agg_run(
@@ -341,7 +362,6 @@ def stream_continuous_agg_run(
     src_dir: str,
     checkpoint_dir: str,
     state_dir: str,
-    max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
     """Continuous aggregate (hypertable-rollup contract): each
     micro-batch writes its *partial* aggregate (count + exact-cents
@@ -359,12 +379,6 @@ def stream_continuous_agg_run(
 
     The batch twin is a plain groupBy over all events — equality is
     the oracle statement (streaming partial-merge == batch)."""
-    stream = stream_files_available_now(
-        spark,
-        src_dir,
-        schema=_events_schema(),
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
     def write_partial(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -382,13 +396,7 @@ def stream_continuous_agg_run(
             .parquet(os.path.join(state_dir, f"b={batch_id}"))
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, _events_schema(), checkpoint_dir, write_partial)
     # the directory, not a ``b=*`` glob (see _read_batches); the
     # discovered ``b`` column drops out in the group-by
     return (
@@ -406,13 +414,11 @@ def stream_upsert_latest_run(
     src_dir: str,
     checkpoint_dir: str,
     state_dir: str,
-    key: str = "user_id",
-    max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
     """Keep-latest upsert sink via ``foreachBatch`` — the streaming
     MERGE INTO contract (R5 + K1): each micro-batch merges into a
-    keyed state table, newest row per key wins (ordered by ts, then
-    event_id as the deterministic tiebreak).
+    state table keyed on ``user_id``, newest row per key wins (ordered
+    by ts, then event_id as the deterministic tiebreak).
 
     The merge is a max-by — associative, commutative, idempotent — so
     the final table equals the batch "latest per key" regardless of
@@ -420,35 +426,42 @@ def stream_upsert_latest_run(
     after a restart converges to the same state (exactly-once effect
     without sink transactions).
 
-    State here is a versioned parquet swap (write v{batch}, then
-    retarget "live") because the sandbox has no table format; on a
-    real deployment this callback body is one ``MERGE INTO`` against
-    Delta/Iceberg and the swap bookkeeping disappears. Scale shape:
-    per-batch shuffle on the key only — old state is read back keyed,
-    never collected."""
+    State here is a versioned parquet swap, as the package uses no
+    table format: every attempt of a batch writes a fresh version
+    directory, a ``LIVE`` file names the current one and is replaced
+    atomically, and only after that are older versions deleted. A
+    batch that fails anywhere in the swap leaves ``LIVE`` naming
+    either the old or the new state, never none, so its re-execution
+    merges into complete state. On a real deployment this callback
+    body is one ``MERGE INTO`` against Delta/Iceberg and the swap
+    bookkeeping disappears. Scale shape: per-batch shuffle on the key
+    only — old state is read back keyed, never collected."""
     import shutil
 
     from pyspark.sql import Window
 
-    stream = stream_files_available_now(
-        spark,
-        src_dir,
-        schema=_events_schema(),
-        max_files_per_trigger=max_files_per_trigger,
-    )
-    live = os.path.join(state_dir, "live")
+    pointer = os.path.join(state_dir, "LIVE")
+
+    def live() -> str | None:
+        if not os.path.exists(pointer):
+            return None
+        with open(pointer) as f:
+            return os.path.join(state_dir, f.read())
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        w = Window.partitionBy(key).orderBy(F.desc("ts"), F.desc("event_id"))
+        w = Window.partitionBy(_UPSERT_KEY).orderBy(
+            F.desc("ts"), F.desc("event_id")
+        )
         latest = (
             batch_df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        if os.path.exists(live):
+        old = live()
+        if old is not None:
             merged = (
-                sess.read.parquet(live)
+                sess.read.parquet(old)
                 .unionByName(latest)
                 .withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
@@ -456,21 +469,17 @@ def stream_upsert_latest_run(
             )
         else:
             merged = latest
-        staged = os.path.join(state_dir, f"v{batch_id}")
-        # materialize the merge BEFORE dropping the old state: the swap
-        # is write-new → remove-old → rename, never read-while-delete
-        merged.write.mode("overwrite").parquet(staged)
-        shutil.rmtree(live, ignore_errors=True)
-        os.rename(staged, live)
+        version = f"v{batch_id}-{uuid.uuid4().hex[:8]}"
+        merged.write.parquet(os.path.join(state_dir, version))
+        with open(pointer + ".tmp", "w") as f:
+            f.write(version)
+        os.replace(pointer + ".tmp", pointer)
+        for d in os.listdir(state_dir):
+            if d.startswith("v") and d != version:
+                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(live)
+    run_per_file(spark, src_dir, _events_schema(), checkpoint_dir, merge_batch)
+    return spark.read.parquet(live())
 
 
 def _events_schema():
@@ -646,6 +655,17 @@ def read_ledger(
     return spark.read.schema(schema).parquet(*dirs)
 
 
+def write_ledger(df: DataFrame, root: str, batch_id) -> str:
+    """Commit ``df`` as the ``batch=<batch_id>`` partition of the
+    ledger under ``root`` (``batch_id`` a micro-batch id, or ``-1`` /
+    ``"base"`` for a bootstrap generation), replacing any earlier
+    attempt of the same batch, and return its path. The write half of
+    :func:`read_ledger`."""
+    path = os.path.join(root, f"batch={batch_id}")
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
 def stream_incremental_dedup_run(
     spark: SparkSession,
     src_dir: str,
@@ -699,25 +719,14 @@ def stream_incremental_dedup_run(
             "ch",
             "left_anti",
         ).localCheckpoint(eager=True)
-        new_rows.select(
-            "ch", F.col("doc_id").alias("canonical_doc_id")
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+        write_ledger(
+            new_rows.select("ch", F.col("doc_id").alias("canonical_doc_id")),
+            out_dir,
+            batch_id,
         )
-        new_rows.select("ch").write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch={batch_id}")
-        )
+        write_ledger(new_rows.select("ch"), store_dir, batch_id)
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["documents"], checkpoint_dir, dedup_batch)
     return _read_batches(spark, out_dir, "ch string, canonical_doc_id long")
 
 
@@ -727,9 +736,7 @@ def bootstrap_seen_store(
     """Load an existing corpus's content hashes into the incremental
     store as the ``batch=-1`` generation (``keys``: one string column
     named ch)."""
-    keys.select("ch").write.mode("overwrite").parquet(
-        os.path.join(store_dir, "batch=-1")
-    )
+    write_ledger(keys.select("ch"), store_dir, -1)
 
 
 def stream_neardup_index_run(
@@ -738,7 +745,6 @@ def stream_neardup_index_run(
     checkpoint_dir: str,
     out_dir: str,
     index_dir: str,
-    threshold: float = 0.9,
 ) -> DataFrame:
     """Streaming NEAR-dup against an incrementally-maintained MinHash
     band index (R18) — the near-duplicate stage of the continuous-
@@ -751,7 +757,7 @@ def stream_neardup_index_run(
     (est ≡ 1.0, no verification), cross-signature candidates by band
     join against the DISTINCT persisted signatures (the
     dedup_minhash_lsh collapse lesson — buckets never hold doc
-    copies), zip_with agreement verify at est ≥ threshold, smallest
+    copies), zip_with agreement verify at est ≥ 0.9, smallest
     matching prior doc id for canonical attribution. Then ALL
     arriving docs' signature rows commit to the index — they are
     corpus now.
@@ -814,7 +820,7 @@ def stream_neardup_index_run(
             .filter(F.col("sk") != F.col("osk"))
             .dropDuplicates(["sk", "osk"])
             .withColumn("est", agree / F.lit(float(nh)))
-            .filter(F.col("est") >= threshold)
+            .filter(F.col("est") >= _NEARDUP_THRESHOLD)
             .select("sk", "osk")
         )
         cross_min = (
@@ -839,23 +845,10 @@ def stream_neardup_index_run(
                 "doc_id", F.lit("near").alias("dup_kind"), "matched_old_id"
             )
         ).localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-        rows.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
+        write_ledger(out, out_dir, batch_id)
+        write_ledger(rows, index_dir, batch_id)
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(match_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["documents"], checkpoint_dir, match_batch)
     return _read_batches(
         spark, out_dir, "doc_id long, dup_kind string, matched_old_id long"
     )
@@ -871,10 +864,12 @@ def bootstrap_neardup_index(
     sig = textdedup.minhash_signatures(docs)
     hcols = [F.col(f"h{i}").cast("string") for i in range(nh)]
     sig_arr = F.array(*[F.col(f"h{i}") for i in range(nh)])
-    sig.withColumn("sk", F.md5(F.concat_ws(",", *hcols))).select(
-        "doc_id", "sk", sig_arr.alias("sig"), "band_0", "band_1"
-    ).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "batch=-1")
+    write_ledger(
+        sig.withColumn("sk", F.md5(F.concat_ws(",", *hcols))).select(
+            "doc_id", "sk", sig_arr.alias("sig"), "band_0", "band_1"
+        ),
+        index_dir,
+        -1,
     )
 
 
@@ -912,25 +907,18 @@ def stream_ivfpq_ingest_run(
             indexed.select("vec_id"), "vec_id", "left_anti"
         )
         _, packed = ivfpq_ops.encode_against_books(fresh, cb, pb)
-        packed.select(
-            "vec_id",
-            F.col("cid").cast("long").alias("cid"),
-            "pq_code",
-            "distortion",
-        ).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
+        write_ledger(
+            packed.select(
+                "vec_id",
+                F.col("cid").cast("long").alias("cid"),
+                "pq_code",
+                "distortion",
+            ),
+            index_dir,
+            batch_id,
         )
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["embeddings"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(encode_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["embeddings"], checkpoint_dir, encode_batch)
     return _read_batches(spark, index_dir, idx_schema)
 
 
@@ -963,20 +951,9 @@ def stream_quality_gate_run(
         fresh = batch_df.join(
             scored.select("doc_id"), "doc_id", "left_anti"
         )
-        score_against(fresh, lm, params).write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
+        write_ledger(score_against(fresh, lm, params), verdict_dir, batch_id)
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["documents"], checkpoint_dir, score_batch)
     return _read_batches(spark, verdict_dir, out_schema)
 
 
@@ -989,7 +966,6 @@ def stream_rerank_serving_run(
     pb: DataFrame,
     codes: DataFrame,
     vectors: DataFrame,
-    k_neighbors: int = 5,
 ) -> DataFrame:
     """Streaming refined ANN serving (R21): arriving QUERY batches
     ADC-retrieve against the FROZEN trained index and exact-re-rank
@@ -1026,22 +1002,13 @@ def stream_rerank_serving_run(
         fresh = qset.join(
             served.select("query_id").distinct(), "query_id", "left_anti"
         )
-        rerank_exact(
-            fresh, cb, pb, codes, vectors, k_neighbors
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+        write_ledger(
+            rerank_exact(fresh, cb, pb, codes, vectors, _RERANK_K),
+            out_dir,
+            batch_id,
         )
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["embeddings"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["embeddings"], checkpoint_dir, serve_batch)
     return _read_batches(spark, out_dir, out_schema)
 
 
@@ -1069,23 +1036,9 @@ def stream_delete_tombstones_run(
             "vec_id",
             "left_anti",
         )
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(tomb_dir, f"batch={batch_id}")
-        )
+        write_ledger(fresh, tomb_dir, batch_id)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, "vec_id long", checkpoint_dir, apply_batch)
     return _read_batches(spark, tomb_dir, "vec_id long").distinct()
 
 
@@ -1147,25 +1100,19 @@ def stream_hybrid_serving_run(
             served.select("query_id").distinct(), "query_id", "left_anti"
         )
         qids = fresh.select(F.col("query_id").alias("doc_id"))
-        _fused(
+        fused = _fused(
             spark, sf_dir, qids=qids, qset=fresh, toks=toks, qv=corpus_qv
-        ).select(
-            "query_id", "doc_id", "r_lex", "r_sem", "rrf_nano",
-            "fused_rank",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+        )
+        write_ledger(
+            fused.select(
+                "query_id", "doc_id", "r_lex", "r_sem", "rrf_nano",
+                "fused_rank",
+            ),
+            out_dir,
+            batch_id,
         )
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["embeddings"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["embeddings"], checkpoint_dir, serve_batch)
     return _read_batches(spark, out_dir, out_schema)
 
 
@@ -1213,20 +1160,9 @@ def stream_scene_cuts_run(
             .cast("long")
             .alias("intra_max_diff"),
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+        write_ledger(out, out_dir, batch_id)
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["documents"], checkpoint_dir, serve_batch)
     return _read_batches(spark, out_dir, out_schema)
 
 
@@ -1305,10 +1241,10 @@ def stream_graph_insert_run(
 
     # base fragment: the frozen-books self-build over the base slice
     # (fresh per call — no cross-query graph memo, VERDICT r15 #2)
-    ivf_knn_topk(
-        base_emb, base_emb, books, q_probes=base_probes
-    ).write.mode("overwrite").parquet(
-        os.path.join(edges_dir, "batch=base")
+    write_ledger(
+        ivf_knn_topk(base_emb, base_emb, books, q_probes=base_probes),
+        edges_dir,
+        "base",
     )
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
@@ -1316,11 +1252,8 @@ def stream_graph_insert_run(
         fresh = batch_df.select(
             "vec_id", "embedding", "label"
         ).join(prior.select("vec_id"), "vec_id", "left_anti")
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
-        )
         fresh = spark.read.schema(emb_schema).parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
+            write_ledger(fresh, members_dir, batch_id)
         )
         # assign this batch's survivors once; on foreachBatch
         # re-execution the entry is recomputed from the rewritten
@@ -1349,23 +1282,9 @@ def stream_graph_insert_run(
                 m_probes=fresh_probes,
             )
         )
-        frag.write.mode("overwrite").parquet(
-            os.path.join(edges_dir, f"batch={batch_id}")
-        )
+        write_ledger(frag, edges_dir, batch_id)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(SCHEMAS["embeddings"])
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, SCHEMAS["embeddings"], checkpoint_dir, maintain)
     frags = _read_batches(spark, edges_dir, edge_schema)
     w = Window.partitionBy("src").orderBy("d2", "dst")
     return (
@@ -1429,9 +1348,7 @@ def stream_graph_delete_run(
     base = ivf_knn_topk(emb, emb, books, q_probes=corpus_probes).select(
         "src", "dst", "d2", F.lit(-1).cast("long").alias("bid")
     )
-    base.write.mode("overwrite").parquet(
-        os.path.join(frags_dir, "batch=base")
-    )
+    write_ledger(base, frags_dir, "base")
 
     def _view(frags: DataFrame, tombs: DataFrame) -> DataFrame:
         # latest fragment per src, minus tombstoned srcs AND dsts.
@@ -1463,11 +1380,8 @@ def stream_graph_delete_run(
         fresh = batch_df.select("vec_id").join(
             prior_tombs, "vec_id", "left_anti"
         )
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(tombs_dir, f"batch={batch_id}")
-        )
         fresh = spark.read.schema(id_schema).parquet(
-            os.path.join(tombs_dir, f"batch={batch_id}")
+            write_ledger(fresh, tombs_dir, batch_id)
         )
         all_tombs = prior_tombs.unionByName(fresh)
         # affected detection reads the view BEFORE this batch's
@@ -1523,23 +1437,9 @@ def stream_graph_delete_run(
             "d2",
             F.lit(batch_id).cast("long").alias("bid"),
         )
-        frag.write.mode("overwrite").parquet(
-            os.path.join(frags_dir, f"batch={batch_id}")
-        )
+        write_ledger(frag, frags_dir, batch_id)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(id_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_per_file(spark, src_dir, id_schema, checkpoint_dir, maintain)
     final = _view(
         read_ledger(spark, frags_dir, frag_schema),
         read_ledger(spark, tombs_dir, id_schema),

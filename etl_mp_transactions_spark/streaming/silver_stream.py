@@ -14,9 +14,13 @@ maxFilesPerTrigger=1.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_mp_transactions_spark.operators.silver import silver_transactions
+from etl_mp_transactions_spark.streaming.filesource import (
+    run_available_now_to_parquet,
+    scaled_state_partitions,
+    stream_files_available_now,
+)
 
 
 def run_silver_stream(
@@ -29,18 +33,10 @@ def run_silver_stream(
 ) -> DataFrame:
     """One AvailableNow pass: bronze files → silver → dedup(checksum)
     → partitioned parquet. Returns the accumulated silver table."""
-    reader = spark.readStream.schema(bronze_schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    bronze = reader.load(bronze_dir)
-
-    silver = silver_transactions(bronze).dropDuplicates(["checksum"])
-
-    from etl_mp_transactions_spark.streaming.filesource import (
-        run_available_now_to_parquet,
-        scaled_state_partitions,
+    bronze = stream_files_available_now(
+        spark, bronze_dir, bronze_schema, max_files_per_trigger
     )
-
+    silver = silver_transactions(bronze).dropDuplicates(["checksum"])
     # state partitions sized from the staged bronze (fixed at first
     # start), the sink's tasks from the bytes one trigger reads
     with scaled_state_partitions(spark, bronze_dir, max_files_per_trigger) as parts:

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from etl_mp_transactions_spark.streaming.filesource import _drain
+
 
 def running_user_totals(stream: DataFrame) -> DataFrame:
     """events stream → one (user_id, n_events, total_value) row per
@@ -111,12 +113,7 @@ def run_stateful(
         )
     else:
         writer = writer.format("parquet").option("path", out_dir)
-    q = (
-        writer.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(writer, checkpoint_dir)
 
 
 def running_user_totals_cents(stream: DataFrame) -> DataFrame:

@@ -106,6 +106,9 @@ _SLOW_TESTS = {
     "test_anomaly.py::test_tfidf_sparse_matches_pair_formula",
     "test_wordpiece_greedy.py::test_matches_python_greedy_replay",
     "test_ivfpq_train.py::test_permute_gain_pins_honest_negative",
+    "test_stream_restart.py::test_restart_equals_uninterrupted[r19]",
+    "test_stream_restart.py::test_restart_equals_uninterrupted[r20]",
+    "test_stream_restart.py::test_restart_equals_uninterrupted[r24]",
 }
 
 

@@ -28,7 +28,6 @@ FAMILY = [
     "quality_classifier_train",
     "quality_classifier_calibration",
     "cramer_probe",
-    "cramer_probe_decimal128",
     "sigmoid_grid_probe",
     # r15 float-purge representatives: one per bigratio kernel shape
     # (scaled_div ranking, isqrt+red stack, DECIMAL-product Cramer,

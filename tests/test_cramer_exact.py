@@ -1,14 +1,13 @@
 """Cramer solve chains on ADVERSARIAL operands across all engines.
 
-Two chains are under test:
+Under test:
 - the LIVE pure-int64 chain (functions/i128.py, VERDICT r13 task #3):
   exact 128-bit limb products + common floor-shift + base-1000 long
   division, NO 128-bit engine type anywhere — its semantics must be
   identical in DuckDB, Spark (under BOTH ANSI modes — the whole point
   is config-invariance), and the python twin, for ANY int64 operands;
-- the RETIRED 128-bit chain (logistic.py _cramer_stages, HUGEINT /
-  DECIMAL(38,0)), kept only as the ``cramer_probe_decimal128`` driver
-  diagnostic — still pinned here so the probe stays meaningful.
+- the Python twin of the retired 128-bit chain (logistic.py
+  cramer_update_py), the exact-rational reference.
 
 Operand sets cover exact-half remainders (the rounding boundary),
 negative numerators, zero/negative/singular denominators, limb-size
@@ -28,13 +27,9 @@ from etl_mp_transactions_spark.functions.i128 import (
     cramer_update_i64_py,
     delta_py,
 )
-from etl_mp_transactions_spark.queries.logistic import (
-    _cramer_stages,
-    cramer_update_py,
-)
+from etl_mp_transactions_spark.queries.logistic import cramer_update_py
 
-# (g0, g1, h00, h01, h11) for the retired chain (requires den > 0 and
-# 128-bit-safe magnitudes — its documented domain):
+# (g0, g1, h00, h01, h11) for the Python twin (requires den > 0):
 CASES = [
     # exact .5 remainder: num/den = 1/2e9 -> rounds away to 1
     (1, 0, 2_000_000_000, 0, 1),
@@ -113,15 +108,6 @@ def _i64_random_cases(n=300, seed=1409):
     return rows
 
 
-def _expected(g0, g1, h00, h01, h11):
-    den = h00 * h11 - h01 * h01
-    assert den > 0
-    return (
-        cramer_update_py(g0 * h11 - g1 * h01, den),
-        cramer_update_py(g1 * h00 - g0 * h01, den),
-    )
-
-
 def test_python_twin_is_exact_rational_half_away():
     for g0, g1, h00, h01, h11 in CASES:
         den = h00 * h11 - h01 * h01
@@ -154,48 +140,6 @@ def test_i64_twin_tracks_exact_rational_within_bound():
             assert abs(Fraction(d) - exact) <= bound
             if den.bit_length() <= 50:
                 assert abs(Fraction(d) - exact) <= Fraction(1, 2)
-
-
-def _run_chain_duck(g0, g1, h00, h01, h11):
-    stages = _cramer_stages("//", "HUGEINT")
-    st0 = ", ".join(stages[0])
-    sql = f"""WITH d AS (
-      SELECT CAST(0 AS BIGINT) AS pb0, CAST(0 AS BIGINT) AS pb1,
-             CAST({g0} AS BIGINT) AS g0, CAST({g1} AS BIGINT) AS g1,
-             CAST({h00} AS BIGINT) AS h00, CAST({h01} AS BIGINT) AS h01,
-             CAST({h11} AS BIGINT) AS h11
-    ), e0 AS (SELECT *, {st0} FROM d)"""
-    src = "e0"
-    for k, st in enumerate(stages[1:-1], start=1):
-        sql += f", e{k} AS (SELECT *, {', '.join(st)} FROM {src})"
-        src = f"e{k}"
-    sql += f" SELECT {', '.join(stages[-1])} FROM {src}"
-    r = duckdb.sql(sql).fetchone()
-    return int(r[0]), int(r[1])
-
-
-def test_retired_duckdb_chain_matches_python_twin():
-    for case in CASES:
-        assert _run_chain_duck(*case) == _expected(*case), case
-
-
-def test_retired_spark_chain_matches_python_twin(spark):
-    stages = _cramer_stages("div", "DECIMAL(38,0)")
-    for case in CASES:
-        g0, g1, h00, h01, h11 = case
-        cur = spark.range(1).selectExpr(
-            "CAST(0 AS BIGINT) AS pb0",
-            "CAST(0 AS BIGINT) AS pb1",
-            f"CAST({g0} AS BIGINT) AS g0",
-            f"CAST({g1} AS BIGINT) AS g1",
-            f"CAST({h00} AS BIGINT) AS h00",
-            f"CAST({h01} AS BIGINT) AS h01",
-            f"CAST({h11} AS BIGINT) AS h11",
-        )
-        for st in stages[:-1]:
-            cur = cur.selectExpr("*", *st)
-        r = cur.selectExpr(*stages[-1]).collect()[0]
-        assert (r["b0"], r["b1"]) == _expected(*case), case
 
 
 def _duck_i64_batch(rows):

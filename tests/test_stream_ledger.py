@@ -1,8 +1,9 @@
 """The shared steps of the exactly-once file-stream runners
 (streaming/filesource.py) and the fixture publish (workdirs.py): the
-ledger reader, the arrival writer and ``publish_fixture``, each pinned
-on tiny frames or temp dirs, plus a guard that the hand-copied
-versions they replaced do not grow back."""
+ledger reader and writer, the arrival writer and ``publish_fixture``,
+each pinned on tiny frames or temp dirs, plus guards that the
+hand-copied versions they replaced, and stream starts that bypass the
+one stream driver, do not grow back."""
 
 import ast
 import os
@@ -15,9 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
 
+from etl_mp_transactions_spark.functions.literalframe import literal_frame
 from etl_mp_transactions_spark.streaming.filesource import (
     read_ledger,
     stage_arrivals,
+    write_ledger,
 )
 from etl_mp_transactions_spark.workdirs import publish_fixture
 
@@ -46,6 +49,24 @@ def test_ledger_leaves_out_only_the_callers_batch(spark, tmp_path):
     assert sorted(r.k for r in everything.collect()) == [
         "-1", "0", "1", "2", "base",
     ]
+
+
+def test_written_ledger_reads_back_without_the_callers_batch(spark, tmp_path):
+    root = str(tmp_path / "ledger")
+    schema = "k string, v long"
+    paths = {
+        b: write_ledger(literal_frame(spark, [(str(b), 1)], schema), root, b)
+        for b in [-1, "base", 0, 1]
+    }
+    assert paths[1] == os.path.join(root, "batch=1")
+    # a re-executed batch replaces its earlier attempt
+    write_ledger(literal_frame(spark, [("1", 2)], schema), root, 1)
+    got = read_ledger(spark, root, schema, skip=1)
+    assert sorted(tuple(r) for r in got.collect()) == [
+        ("-1", 1), ("0", 1), ("base", 1),
+    ]
+    own = spark.read.schema(schema).parquet(paths[1])
+    assert [tuple(r) for r in own.collect()] == [("1", 2)]
 
 
 @pytest.mark.parametrize("state", ["missing", "empty"])
@@ -164,3 +185,26 @@ def test_one_ledger_reader_one_arrival_writer_one_publish():
         for p, n in _hits(everywhere, r"shutil\.move\(os\.path\.join\(tmp, part\)")
     ]
     assert not moved, f"write single files with write_single_file: {moved}"
+
+
+@pytest.mark.parametrize(
+    "pattern, owners",
+    [
+        (r"awaitTermination\(", ["_drain"]),
+        (r"\.readStream\b", ["stream_files_available_now"]),
+        (r'format\("memory"\)', ["run_to_memory"]),
+        (r"""['"]batch=""", ["read_ledger", "write_ledger", "_read_batches"]),
+    ],
+    ids=["await", "reader", "memory-sink", "ledger-layout"],
+)
+def test_one_stream_driver(pattern, owners):
+    """Every stream starts, reads, sinks to memory and names a ledger
+    partition only inside the filesource functions that own it."""
+    filesource = PACKAGE / "streaming" / "filesource.py"
+    owned = {n for name in owners for n in _function_lines(filesource, name)}
+    stray = [
+        f"{p.relative_to(ROOT)}:{n}"
+        for p, n in _hits(sorted(PACKAGE.rglob("*.py")), pattern)
+        if not (p == filesource and n in owned)
+    ]
+    assert not stray, f"{pattern} belongs to {owners} only: {stray}"

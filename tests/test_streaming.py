@@ -4,7 +4,8 @@ contract), watermark windowed aggregation."""
 
 import os
 import shutil
-import uuid
+
+import pytest
 
 from etl_mp_transactions_spark.sources.tables import load_table
 from etl_mp_transactions_spark.streaming.filesource import (
@@ -39,9 +40,7 @@ def test_windowed_counts_match_batch(spark, sf_dir, tmp_path):
 
     stage = str(tmp_path / "in")
     stage_events_as_files(spark, sf_dir, stage, n_files=2)
-    out = stream_windowed_counts_run(
-        spark, stage, str(tmp_path / "ckpt"),
-        out_table=f"w_{uuid.uuid4().hex[:8]}")
+    out = stream_windowed_counts_run(spark, stage, str(tmp_path / "ckpt"))
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -95,6 +94,52 @@ def test_upsert_replay_converges_to_same_state(spark, sf_dir, tmp_path):
         key=lambda r: r.user_id,
     )
     assert snap1 == snap2
+
+
+def test_upsert_survives_a_failed_state_swap(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The keep-latest state swap fails once, at the rename that
+    publishes batch 1's state; a restart on the same checkpoint and
+    state re-executes batch 1 and must end where one uninterrupted run
+    ends. A swap that drops the old state before the new one is
+    visible leaves the re-run nothing to merge into, and every key
+    whose latest row came in batch 0 is lost."""
+    from etl_mp_transactions_spark.streaming.filesource import (
+        staged_event_batches_cached,
+        stream_upsert_latest_run,
+    )
+
+    stage = staged_event_batches_cached(spark, sf_dir, n_batches=4)
+
+    def run(work):
+        out = stream_upsert_latest_run(
+            spark, stage, str(work / "ckpt"), str(work / "state")
+        )
+        return sorted(tuple(r) for r in out.collect())
+
+    want = run(tmp_path / "once")
+
+    work = tmp_path / "interrupted"
+    state = str(work / "state")
+    publishes = []
+
+    def fail_second_publish(real):
+        def rename(src, dst, *args, **kwargs):
+            if str(dst).startswith(state):
+                publishes.append(dst)
+                if len(publishes) == 2:
+                    raise OSError("state swap of batch 1 interrupted")
+            return real(src, dst, *args, **kwargs)
+
+        return rename
+
+    monkeypatch.setattr(os, "rename", fail_second_publish(os.rename))
+    monkeypatch.setattr(os, "replace", fail_second_publish(os.replace))
+    with pytest.raises(Exception, match="state swap of batch 1 interrupted"):
+        run(work)
+    monkeypatch.undo()
+    assert run(work) == want and want
 
 
 def test_dedup_within_watermark_branch(spark, sf_dir, tmp_path):

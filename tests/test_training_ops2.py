@@ -128,7 +128,6 @@ def test_stream_session_append_subset(spark, sf_dir, tmp_path):
         spark,
         stage,
         os.path.join(str(tmp_path), "ckpt"),
-        out_table="r8_append_test",
         output_mode="append",
     ).collect()
     assert len(out) > 0
