@@ -72,51 +72,8 @@ IVFPQ_KC = 8  # coarse centroids (inverted lists)
 IVFPQ_NPROBE = 2  # lists scanned per query
 COARSE_TAG = ":ivfpq-coarse-1"
 RESID_TAG = ":ivfpq-resid-1"
-
-# Each entry point materializes ONE n-row residual frame and one
-# codes frame per call (the codebook seed scan and the encode both
-# replay the full n×KC assignment without it; every ADC consumer
-# replays the n×KS argmin without the codes cut). r16: the
-# materialization is a LAZY ``localCheckpoint`` — per-DataFrame, so
-# within ONE invocation every consumer reads the materialized rows,
-# but (unlike the r15 ``.persist()``) it does NOT register in the
-# CacheManager, whose plan-matching silently served one query's codes
-# to LATER queries with identical plans — cross-query result sharing
-# the optimization rules disallow (VERDICT r15 task #2). Lazy (not
-# eager) so the foreachBatch streaming callers stay legal. References
-# are tracked module-wide with a FIFO bound so a full registry/bench
-# run drops old frames for the ContextCleaner to reclaim instead of
-# accumulating one per invocation; compositions that interleave entry
-# points (e.g. ivfpq_recall_at5: seeded plan + trained books + both
-# executed) keep EVERY frame of the current query alive — the
-# previous evict-on-next-entry policy dropped the seeded frame before
-# first use (ADVICE r10). _MAX_CACHED counts FRAMES (3 per entry
-# point since the r16 quantized-corpus cut: q, resid, codes), so 12
-# covers 4 composed entry-point calls (ADVICE r15 low: too small a
-# ring could evict the current query's frames before first use).
-# Dropping a reference a still-unexecuted plan holds is safe — the
-# plan holds its own JVM reference; only this module's bookkeeping
-# forgets it.
-_MAX_CACHED = 12
-_cached: list[DataFrame] = []
-
-
-def release_cache() -> int:
-    """Forget every residual/codes frame this module still tracks
-    (the ContextCleaner reclaims checkpoint blocks once the JVM
-    references drop). Returns the number released."""
-    n = len(_cached)
-    _cached.clear()
-    return n
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    while len(_cached) >= _MAX_CACHED:
-        _cached.pop(0)
-    df = df.localCheckpoint(eager=False)
-    _cached.append(df)
-    return df
-
+# Each entry point cuts its quantized corpus, residual and codes frames
+# with a LAZY localCheckpoint: the foreachBatch streaming callers need it.
 
 _FULL_D2 = (
     "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
@@ -273,14 +230,16 @@ def ivfpq_encode(
     # ONE scan+quantize pass per call: the quantized corpus feeds the
     # coarse seed pick AND the assignment (r16 — formerly each ran its
     # own parquet scan + quantize transform)
-    q = _persist_tracked(_quantized(embeddings, id_col))
+    q = _quantized(embeddings, id_col).localCheckpoint(eager=False)
     cb = coarse_books(embeddings, id_col, q=q)
     # ONE assignment pass: the residual frame feeds both the codebook
     # seed pick (a TakeOrdered over it) and the encode itself —
-    # without the persist, residual_books' seed scan and the encode
+    # without the cut, residual_books' seed scan and the encode
     # each replay the full n×KC assignment (measured as most of the
     # encode's 10×-step wall)
-    resid = _persist_tracked(coarse_assign(embeddings, cb, id_col, q=q))
+    resid = coarse_assign(embeddings, cb, id_col, q=q).localCheckpoint(
+        eager=False
+    )
     pb = residual_books(resid)
     out = _encode_resid(resid, pb)
     return out
@@ -314,9 +273,9 @@ def _encode_resid(
     from etl_mp_transactions_spark.operators.pq import subspace_codes_lit
 
     pb_rows = books_rows(pb, "pcqv")
-    codes = _persist_tracked(
-        subspace_codes_lit(resid, pb_rows, ["vec_id", "cid"], "rqv")
-    )
+    codes = subspace_codes_lit(
+        resid, pb_rows, ["vec_id", "cid"], "rqv"
+    ).localCheckpoint(eager=False)
     packed = codes.groupBy("vec_id", "cid").agg(
         F.sum(
             F.expr("shiftleft(cast(code as bigint), 4 * m)")
@@ -335,9 +294,11 @@ def ivfpq_adc_topk(
     probed lists against one broadcast nprobe×M×KS lookup table of
     exact per-list residual subspace distances — vectors outside the
     probed lists are never read, and raw vectors are never touched."""
-    q = _persist_tracked(_quantized(embeddings, id_col))
+    q = _quantized(embeddings, id_col).localCheckpoint(eager=False)
     cb = coarse_books(embeddings, id_col, q=q)
-    resid = _persist_tracked(coarse_assign(embeddings, cb, id_col, q=q))
+    resid = coarse_assign(embeddings, cb, id_col, q=q).localCheckpoint(
+        eager=False
+    )
     pb = residual_books(resid)
     codes, _ = _encode_resid(resid, pb)
     qvec = q.orderBy("vec_id").limit(1).select(
@@ -413,9 +374,11 @@ def ivfpq_adc_batch(
     batches, so per-batch work stays ∝ corpus × nprobe/KC regardless
     of corpus size (vs the inherently quadratic "all vectors query
     all lists")."""
-    q = _persist_tracked(_quantized(embeddings, id_col))
+    q = _quantized(embeddings, id_col).localCheckpoint(eager=False)
     cb = coarse_books(embeddings, id_col, q=q)
-    resid = _persist_tracked(coarse_assign(embeddings, cb, id_col, q=q))
+    resid = coarse_assign(embeddings, cb, id_col, q=q).localCheckpoint(
+        eager=False
+    )
     pb = residual_books(resid)
     codes, _ = _encode_resid(resid, pb)
     qset = (

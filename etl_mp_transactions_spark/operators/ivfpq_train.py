@@ -53,7 +53,6 @@ from pyspark.sql import functions as F
 
 from etl_mp_transactions_spark.operators.ivfpq import (
     _FULL_D2,
-    _persist_tracked,
     coarse_assign,
     coarse_books,
     residual_books,
@@ -228,9 +227,11 @@ def trained_books(
     # assignment (r16 — formerly the seed, each of the COARSE_ITERS
     # step jobs, and coarse_assign each re-ran the parquet scan +
     # quantize transform)
-    q = _persist_tracked(_quantized(embeddings, id_col))
+    q = _quantized(embeddings, id_col).localCheckpoint(eager=False)
     cb = lloyd_refine_coarse(q, coarse_books(embeddings, id_col, q=q))
-    resid = _persist_tracked(coarse_assign(embeddings, cb, id_col, q=q))
+    resid = coarse_assign(embeddings, cb, id_col, q=q).localCheckpoint(
+        eager=False
+    )
     pb = lloyd_refine_sub(resid, residual_books(resid))
     return cb, pb, resid
 

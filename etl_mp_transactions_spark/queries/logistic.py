@@ -273,11 +273,10 @@ def with_p_nano(df, params, sig, x: str = "x"):
     )
 
 
-def newton_steps(spark, rows, n_steps: int = N_STEPS) -> list:
-    """All ``n_steps`` per-step frames (b0, b1, g0, g1, h00, h01,
-    h11), in step order — the instrumentation surface (VERDICT r12
-    task #1: the trajectory debug queries read every step, not just
-    the last).
+def newton_train(spark, rows):
+    """(params_df, last_step_df) after N_STEPS exact Newton steps over
+    rows(x, y); the last step's frame holds (b0, b1, g0, g1, h00, h01,
+    h11).
 
     r16 pass structure (guide §1.2; the pca/kmeans driver-fold
     pattern): ONE grouped collect of the (x, y, n) multiset — bounded
@@ -287,9 +286,8 @@ def newton_steps(spark, rows, n_steps: int = N_STEPS) -> list:
     ``sig_pn_py`` (same 401 literals), every contribution is the same
     BIGINT arithmetic (Python int ≡ exact), and the solve is
     ``cramer_update_i64_py`` — the twin tests/test_cramer_exact.py
-    pins equal to BOTH engines' staged chains. The former shape ran
-    one eager-checkpoint job per step (broadcast sig join + reduce);
-    this runs zero — steps return as literal frames."""
+    pins equal to BOTH engines' staged chains. No job runs after the
+    collect: the last step returns as a literal frame."""
     rows_g = [
         (int(r["x"]), int(r["y"]), int(r["n"]))
         for r in rows.groupBy("x", "y")
@@ -297,8 +295,7 @@ def newton_steps(spark, rows, n_steps: int = N_STEPS) -> list:
         .collect()
     ]
     b0 = b1 = 0
-    steps: list = []
-    for _ in range(n_steps):
+    for _ in range(N_STEPS):
         g0 = g1 = h00 = h01 = h11 = 0
         for x, y, n in rows_g:
             pn = sig_pn_py(b0 + b1 * x)
@@ -313,23 +310,12 @@ def newton_steps(spark, rows, n_steps: int = N_STEPS) -> list:
             # same loud headroom failure as the in-engine guard
             raise ArithmeticError(_GUARD_MSG.strip("'"))
         b0, b1 = cramer_update_i64_py(b0, b1, g0, g1, h00, h01, h11)
-        steps.append(
-            literal_frame(
-                spark,
-                [(b0, b1, g0, g1, h00, h01, h11)],
-                "b0 bigint, b1 bigint, g0 bigint, g1 bigint,"
-                " h00 bigint, h01 bigint, h11 bigint",
-            )
-        )
-    return steps
-
-
-def newton_train(spark, rows, n_steps: int = N_STEPS):
-    """(params_df, last_step_df) after ``n_steps`` exact Newton steps
-    over rows(x, y) — the training entry point (``newton_steps`` is
-    the per-step instrumentation surface)."""
-    steps = newton_steps(spark, rows, n_steps)
-    last = steps[-1]
+    last = literal_frame(
+        spark,
+        [(b0, b1, g0, g1, h00, h01, h11)],
+        "b0 bigint, b1 bigint, g0 bigint, g1 bigint,"
+        " h00 bigint, h01 bigint, h11 bigint",
+    )
     return last.select("b0", "b1"), last
 
 

@@ -838,258 +838,6 @@ def quality_classifier_poscontrol(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------
-# Driver-side differential instrumentation (VERDICT r12 task #1): the
-# poscontrol query has been driver-red / local-green for two rounds,
-# which cannot be debugged from this box. These two entries decompose
-# the poscontrol chain into its driver-attestable stages so the next
-# CORRECTNESS artifact localizes the diverging stage by itself:
-#   - docx red            → the bigram/feature pipeline diverges;
-#   - trajectory red at k → the Newton solve diverges at step k
-#                           (and the in-result g/h sums say whether
-#                           the INPUT to the solve already differed);
-#   - both green, poscontrol red → the scoring/threshold tail.
-# Both are spotlight-pinned next to quality_classifier_poscontrol.
-
-
-@query(
-    "quality_classifier_poscontrol_docx",
-    materialize_ctes(f"""
-    WITH {_posctrl_ctes()[0]}
-    SELECT doc_id, x, y FROM docx ORDER BY doc_id
-    """),
-)
-def quality_classifier_poscontrol_docx(spark, sf_dir):
-    """Stage-1 instrumentation of the poscontrol divergence: the full
-    per-doc (doc_id, x, y) feature table — the exact input the Newton
-    training consumes. If THIS disagrees between driver and oracle,
-    the divergence is in the hashed-bigram/evidence/bit-length
-    feature pipeline, not the solver."""
-    return (
-        _posctrl_docx(spark, sf_dir)
-        .select("doc_id", "x", "y")
-        .orderBy("doc_id")
-    )
-
-
-_TRAJ_COLS = ["b0_nano", "b1_nano", "g0", "g1", "h00", "h01", "h11"]
-
-
-def _traj_step_select(i: int) -> str:
-    """One trajectory row from p{i}, every value CAST to VARCHAR in
-    the oracle (VERDICT r13 task #3 insurance: a STRING column hash
-    has no numeric type-canonicalization surface at the driver)."""
-    return (
-        f"SELECT CAST({i} AS BIGINT) AS step,"
-        f" CAST(b0 AS VARCHAR) AS b0_nano, CAST(b1 AS VARCHAR) AS b1_nano,"
-        f" CAST(g0 AS VARCHAR) AS g0, CAST(g1 AS VARCHAR) AS g1,"
-        f" CAST(h00 AS VARCHAR) AS h00, CAST(h01 AS VARCHAR) AS h01,"
-        f" CAST(h11 AS VARCHAR) AS h11 FROM p{i}"
-    )
-
-
-def _posctrl_traj_sql() -> str:
-    sel = " UNION ALL ".join(
-        _traj_step_select(i) for i in range(1, N_STEPS + 1)
-    )
-    return materialize_ctes(
-        f"WITH {','.join(_posctrl_ctes())} {sel} ORDER BY step"
-    )
-
-
-def _traj_step_frame(st, i: int):
-    """Spark twin of ``_traj_step_select``: the step-i frame with the
-    identical column names and STRING casts."""
-    return st.select(
-        F.lit(i).cast("long").alias("step"),
-        F.col("b0").cast("string").alias("b0_nano"),
-        F.col("b1").cast("string").alias("b1_nano"),
-        F.col("g0").cast("string").alias("g0"),
-        F.col("g1").cast("string").alias("g1"),
-        F.col("h00").cast("string").alias("h00"),
-        F.col("h01").cast("string").alias("h01"),
-        F.col("h11").cast("string").alias("h11"),
-    )
-
-
-@query("quality_classifier_poscontrol_trajectory", _posctrl_traj_sql())
-def quality_classifier_poscontrol_trajectory(spark, sf_dir):
-    """Stage-2 instrumentation of the poscontrol divergence: one row
-    per Newton step with the post-step parameters AND the exact
-    integer gradient/Hessian sums that produced them. A red cell at
-    step k localizes the first diverging operation; identical g/h
-    with differing b means the solve itself, differing g/h at step 1
-    means the (x, y) rows already differed (see the docx probe)."""
-    from etl_mp_transactions_spark.queries.logistic import newton_steps
-
-    docx = _posctrl_docx(spark, sf_dir)
-    steps = newton_steps(
-        spark, docx.filter(F.expr(_TRAIN_PRED)).select("x", "y")
-    )
-    out = None
-    for i, st in enumerate(steps, start=1):
-        fr = _traj_step_frame(st, i)
-        out = fr if out is None else out.unionByName(fr)
-    return out.orderBy("step")
-
-
-# Per-step SINGLE-ROW driver entries (VERDICT r13 task #1): the
-# driver's hash is per-query, so the 3-row trajectory being red does
-# not say WHICH step first diverges. One entry per Newton step makes
-# the next CORRECTNESS artifact name the first diverging step itself.
-# Decisive readings: step1 red → the engines disagree on a pure-BIGINT
-# grouped sum over the (driver-green) docx multiset from p0 = (0, 0) —
-# a scan/agg-layer divergence, not the solve; step k>1 first-red →
-# the divergence enters between steps (params feed z-quantization);
-# all green with poscontrol red → the scoring/threshold tail.
-
-
-def _posctrl_step_sql(i: int) -> str:
-    return materialize_ctes(
-        f"WITH {','.join(_posctrl_ctes())} {_traj_step_select(i)}"
-    )
-
-
-def _posctrl_step(spark, sf_dir, i: int):
-    from etl_mp_transactions_spark.queries.logistic import newton_steps
-
-    docx = _posctrl_docx(spark, sf_dir)
-    steps = newton_steps(
-        spark, docx.filter(F.expr(_TRAIN_PRED)).select("x", "y"), i
-    )
-    return _traj_step_frame(steps[-1], i)
-
-
-@query("quality_classifier_poscontrol_step1", _posctrl_step_sql(1))
-def quality_classifier_poscontrol_step1(spark, sf_dir):
-    """Newton step 1 of the poscontrol trajectory as a single driver-
-    hashable row (see block comment): from p0 = (0, 0) the g/h sums
-    depend ONLY on the docx (x, y) multiset and the zd = 0 grid row,
-    so a red here means the engines disagree on a pure-BIGINT grouped
-    sum over identical inputs."""
-    return _posctrl_step(spark, sf_dir, 1)
-
-
-@query("quality_classifier_poscontrol_step2", _posctrl_step_sql(2))
-def quality_classifier_poscontrol_step2(spark, sf_dir):
-    """Newton step 2 of the poscontrol trajectory (single row; see
-    block comment above)."""
-    return _posctrl_step(spark, sf_dir, 2)
-
-
-@query("quality_classifier_poscontrol_step3", _posctrl_step_sql(3))
-def quality_classifier_poscontrol_step3(spark, sf_dir):
-    """Newton step 3 (final) of the poscontrol trajectory (single
-    row; see block comment above)."""
-    return _posctrl_step(spark, sf_dir, 3)
-
-
-# ---------------------------------------------------------------------
-# The two DECISIVE probes (VERDICT r14 task #1). After r14, every
-# upstream stage of the poscontrol chain is driver-attested green:
-# docx (inputs), step1/2/3 + trajectory (params), both cramer probes
-# (solve arithmetic), sigmoid grid (scoring arithmetic on literals),
-# calibration (per-bin p_nano sums over the SAME held-out slice) —
-# yet the 1-row final verdict stays red. Exactly two hypotheses
-# survive, and these two entries decide between them:
-#   - predx red   → the per-doc scores/gate diverge on the driver box
-#                   (and the artifact names the first diverging doc);
-#   - predx green + varchar green + original red
-#                 → the driver's hash canonicalization of the original
-#                   row's type mix (VARCHAR b0/b1 + BIGINT counts +
-#                   BOOLEAN deployable) is the culprit; the permanent
-#                   fix is to re-emit poscontrol in the attested
-#                   all-VARCHAR representation.
-
-
-@query(
-    "quality_classifier_poscontrol_predx",
-    materialize_ctes(f"""
-    WITH {",".join(_posctrl_ctes())},
-    pred AS (
-      SELECT d.doc_id, d.y, {_SCORE_PN} AS p_nano
-      FROM docx d CROSS JOIN p{N_STEPS} {_SCORE_JOIN}
-      WHERE {_EVAL_PRED}
-    )
-    SELECT doc_id, CAST(y AS BIGINT) AS y,
-           CAST(p_nano AS BIGINT) AS p_nano,
-           CAST(CASE WHEN p_nano >= {KEEP_THRESHOLD_NANO}
-                THEN 1 ELSE 0 END AS BIGINT) AS keep
-    FROM pred ORDER BY doc_id
-    """),
-)
-def quality_classifier_poscontrol_predx(spark, sf_dir):
-    """Decisive probe (a): the per-doc SCORED eval slice — (doc_id,
-    y, p_nano, keep as INT 0/1) for every held-out doc. The docx
-    probe attested the features; this attests the scores and the
-    gate decision per doc (corpus-bounded: one row per eval doc,
-    ~250 at sf0.01). A red here means the scoring tail itself
-    diverges, and the differing doc_id is directly readable from the
-    artifact; green here shifts the poscontrol red onto the final
-    row's representation (see the varchar probe)."""
-    docx = _posctrl_docx(spark, sf_dir)
-    params = _trained_params(spark, docx.filter(F.expr(_TRAIN_PRED)))
-    return (
-        with_p_nano(
-            docx.filter(F.expr(_EVAL_PRED)), params, sig_spark_df(spark)
-        )
-        .select(
-            "doc_id",
-            F.col("y").cast("bigint").alias("y"),
-            F.col("pn").cast("bigint").alias("p_nano"),
-            F.when(F.col("pn") >= KEEP_THRESHOLD_NANO, 1)
-            .otherwise(0)
-            .cast("bigint")
-            .alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _posctrl_varchar_sql() -> str:
-    """The poscontrol verdict row with EVERY column rendered VARCHAR
-    (deployable first re-expressed as INT 0/1, then cast) — zero
-    numeric/boolean type surface for the driver's hash to
-    canonicalize."""
-    inner = _posctrl_sql()
-    cols = ", ".join(
-        f"CAST(v.{c} AS VARCHAR) AS {c}"
-        for c in ("b0_nano", "b1_nano", "tp", "fp", "tn", "fn",
-                  "accuracy_bp", "base_bp")
-    )
-    return materialize_ctes(
-        f"SELECT {cols}, CAST(CASE WHEN v.deployable THEN 1 ELSE 0 END"
-        f" AS VARCHAR) AS deployable FROM ({inner}) v"
-    )
-
-
-@query("quality_classifier_poscontrol_varchar", _posctrl_varchar_sql())
-def quality_classifier_poscontrol_varchar(spark, sf_dir):
-    """Decisive probe (b): the IDENTICAL poscontrol final row (same
-    chain, same values) re-emitted with every column CAST to VARCHAR
-    and ``deployable`` as INT 0/1 before the cast. STRING columns
-    have no numeric-type canonicalization surface at the driver
-    (the r13 trajectory insurance, driver-proven green), so:
-    original red + THIS green == the divergence lives in the hash's
-    handling of the original type mix, not in any computed value —
-    and this entry's representation becomes the fix."""
-    base = quality_classifier_poscontrol(spark, sf_dir)
-    out = base.select(
-        *[
-            F.col(c).cast("string").alias(c)
-            for c in (
-                "b0_nano", "b1_nano", "tp", "fp", "tn", "fn",
-                "accuracy_bp", "base_bp",
-            )
-        ],
-        F.when(F.col("deployable"), 1)
-        .otherwise(0)
-        .cast("string")
-        .alias("deployable"),
-    )
-    return out
-
-
 # calibration audit: 10 equal-width probability bins over [0, 1)
 CAL_BINS = 10
 

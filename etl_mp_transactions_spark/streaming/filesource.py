@@ -115,7 +115,9 @@ def run_to_memory(
     """Run the stateful stream ``df`` over the files staged in
     ``src_dir`` into a memory sink under a fresh query name, with its
     state partitions sized from those files, and return the sink's
-    table."""
+    table. The sink's view is dropped before returning: the returned
+    frame's analyzed plan already holds the sink's rows, and a view left
+    registered would keep them for the session's lifetime."""
     spark = df.sparkSession
     name = f"mem_{uuid.uuid4().hex}"
     with scaled_state_partitions(spark, src_dir):
@@ -125,7 +127,9 @@ def run_to_memory(
             .outputMode(output_mode),
             checkpoint_dir,
         )
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _staged_bytes(
@@ -370,37 +374,36 @@ def stream_continuous_agg_run(
 
     Exactly-once without sink transactions: aggregate merges are NOT
     idempotent under foreachBatch replay (a re-run batch would
-    double-count if merged in place), but an overwrite keyed by
-    batch_id is — replaying batch b rewrites ``b=<id>`` with identical
-    content instead of adding to it. Merge cost at read ∝ number of
-    batch partials × group cardinality (kilobytes each); a periodic
-    compaction folds old partials into one (same algebra, same
-    guarantee).
+    double-count if merged in place), but the ledger write keyed by
+    batch_id is — replaying batch b rewrites ``batch=<id>`` with
+    identical content instead of adding to it. Merge cost at read ∝
+    number of batch partials × group cardinality (kilobytes each); a
+    periodic compaction folds old partials into one (same algebra,
+    same guarantee).
 
     The batch twin is a plain groupBy over all events — equality is
     the oracle statement (streaming partial-merge == batch)."""
 
     def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy(
-                F.date_trunc("hour", "ts").alias("window_start"),
-                "event_type",
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
-                    "value_cents"
-                ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, f"b={batch_id}"))
+        partial = batch_df.groupBy(
+            F.date_trunc("hour", "ts").alias("window_start"),
+            "event_type",
+        ).agg(
+            F.count("*").alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
+                "value_cents"
+            ),
         )
+        write_ledger(partial, state_dir, batch_id)
 
     run_per_file(spark, src_dir, _events_schema(), checkpoint_dir, write_partial)
-    # the directory, not a ``b=*`` glob (see _read_batches); the
-    # discovered ``b`` column drops out in the group-by
     return (
-        spark.read.parquet(state_dir)
+        _read_batches(
+            spark,
+            state_dir,
+            "window_start timestamp, event_type string, n bigint,"
+            " value_cents bigint",
+        )
         .groupBy("window_start", "event_type")
         .agg(
             F.sum("n").alias("n"),

@@ -18,13 +18,6 @@ from etl_mp_transactions_spark.registry import queries
 FAMILY = [
     "logistic_newton_steps",
     "quality_classifier_poscontrol",
-    "quality_classifier_poscontrol_docx",
-    "quality_classifier_poscontrol_trajectory",
-    "quality_classifier_poscontrol_step1",
-    "quality_classifier_poscontrol_step3",
-    # r15 decisive probes — same invariance bar as the family
-    "quality_classifier_poscontrol_predx",
-    "quality_classifier_poscontrol_varchar",
     "quality_classifier_train",
     "quality_classifier_calibration",
     "cramer_probe",

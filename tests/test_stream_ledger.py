@@ -19,7 +19,9 @@ from pyspark.sql.types import _parse_datatype_string
 from etl_mp_transactions_spark.functions.literalframe import literal_frame
 from etl_mp_transactions_spark.streaming.filesource import (
     read_ledger,
+    run_to_memory,
     stage_arrivals,
+    stream_files_available_now,
     write_ledger,
 )
 from etl_mp_transactions_spark.workdirs import publish_fixture
@@ -99,6 +101,29 @@ def test_arrivals_are_four_ordered_files_and_a_replay(spark, tmp_path):
         assert sorted(t.column("id").to_pylist()) == list(range(g, 12, 4))
     with open(paths[0], "rb") as a, open(paths[4], "rb") as b:
         assert a.read() == b.read()
+
+
+def test_memory_run_leaves_no_view_and_keeps_its_rows(spark, tmp_path):
+    """``run_to_memory`` drops its sink's view before returning: two
+    runs leave no ``mem_*`` name in the catalog, and each returned
+    frame, collected after its view is gone, still reads the sink."""
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array(["a", "b", "a"]), "v": pa.array([1, 2, 3])}),
+        src / "part-0.parquet",
+    )
+    runs = []
+    for i in range(2):
+        stream = stream_files_available_now(spark, str(src), "k string, v long")
+        counts = stream.groupBy("k").agg(F.count("*").alias("n"))
+        runs.append(
+            run_to_memory(counts, str(src), str(tmp_path / f"ckpt{i}"), "complete")
+        )
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")]
+    assert not views, views
+    for out in runs:
+        assert sorted(map(tuple, out.collect())) == [("a", 2), ("b", 1)]
 
 
 def test_publish_loser_keeps_the_winners_copy(tmp_path):
@@ -193,7 +218,7 @@ def test_one_ledger_reader_one_arrival_writer_one_publish():
         (r"awaitTermination\(", ["_drain"]),
         (r"\.readStream\b", ["stream_files_available_now"]),
         (r'format\("memory"\)', ["run_to_memory"]),
-        (r"""['"]batch=""", ["read_ledger", "write_ledger", "_read_batches"]),
+        (r"""['"]b(atch)?=""", ["read_ledger", "write_ledger", "_read_batches"]),
     ],
     ids=["await", "reader", "memory-sink", "ledger-layout"],
 )

@@ -83,11 +83,11 @@ def test_continuous_agg_replay_adds_nothing(spark, sf_dir, tmp_path):
     state = os.path.join(str(tmp_path), "state")
     stage_events_as_files(spark, sf_dir, stage, n_files=3)
     first = stream_continuous_agg_run(spark, stage, ckpt, state).collect()
-    batches = [d for d in os.listdir(state) if d.startswith("b=")]
+    batches = [d for d in os.listdir(state) if d.startswith("batch=")]
     assert len(batches) == 3, batches
     second = stream_continuous_agg_run(spark, stage, ckpt, state).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
-    assert len([d for d in os.listdir(state) if d.startswith("b=")]) == 3
+    assert len([d for d in os.listdir(state) if d.startswith("batch=")]) == 3
 
 
 def test_lm_quality_partition_invariant(spark, sf_dir):

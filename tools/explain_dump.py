@@ -2,10 +2,12 @@
 
 Usage: python tools/explain_dump.py OUTDIR SUFFIX [sf_dir] query [query ...]
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each query. Only builds the
-plan (no execution), so it is cheap and safe on a loaded box.
-Streaming queries that cannot produce a batch plan without running
-are skipped with a note.
+Writes OUTDIR/<query>_<SUFFIX>.txt for each query. It does not run
+the final plan, but building it runs every job the query finishes
+before it returns a DataFrame (training loops, collected codebooks,
+streaming runners), and most registry entries run at least one, so
+building is not free. Streaming queries that cannot produce a batch
+plan without running are skipped with a note.
 """
 
 from __future__ import annotations

@@ -180,7 +180,7 @@ def main() -> int:
                 fh, indent=1, sort_keys=True,
             )
         print(f"# wrote {out_path}")
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} ok; failed: {failed or 'none'}")
+    print(f"\n{len(report) - len(failed)}/{len(report)} ok; failed: {failed or 'none'}")
     return 1 if failed else 0
 
 
