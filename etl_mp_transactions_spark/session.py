@@ -12,13 +12,67 @@ partition is ~100-200 MB of shuffle data; AQE coalesces the rest).
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from etl_mp_transactions_spark.workdirs import publish_fixture
 
 # Conservative local default; bench/tests override via env. At cluster
 # scale you want cores*2..3 initial partitions and let AQE coalesce.
 _DEFAULT_LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_LOCAL_FS_SRC = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "InProcessLocalFileSystem.java"
+)
+_LOCAL_FS_CLASS = "etl_mp_transactions_spark.jvm.InProcessLocalFileSystem"
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Confs that put ``InProcessLocalFileSystem`` behind ``file://``:
+    its classes on the driver classpath and ``fs.file.impl``. Empty when
+    the JVM is already running (its classpath is fixed), or when no
+    ``javac`` or Hadoop jar is there to compile with. The classes are
+    compiled once per machine, under a key hashed from the source and
+    the Spark build."""
+    jvm_running = (
+        SparkContext._gateway is not None
+        # spark-submit started the JVM and hands pyspark its port
+        or "PYSPARK_GATEWAY_PORT" in os.environ
+    )
+    # a "hadoop-provided" Spark build ships no Hadoop jar to compile against
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    if jvm_running or shutil.which("javac") is None or not jars:
+        return {}
+    hadoop_api = jars[0]
+    with open(_LOCAL_FS_SRC, "rb") as f:
+        src = f.read()
+    key = hashlib.sha256(
+        src + pyspark.__version__.encode() + os.path.basename(hadoop_api).encode()
+    ).hexdigest()[:16]
+
+    def build(staging: str) -> None:
+        subprocess.run(
+            ["javac", "--release", "17", "-nowarn", "-cp", hadoop_api,
+             "-d", staging, _LOCAL_FS_SRC],
+            check=True, capture_output=True,
+        )
+
+    classes = publish_fixture(
+        os.path.join(tempfile.gettempdir(), f"sg_localfs_{key}"), build
+    )
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": _LOCAL_FS_CLASS,
+    }
 
 
 def get_spark(
@@ -56,6 +110,20 @@ def get_spark(
       Hadoop ``.crc`` sidecars and Spark's state-file checksums
       (``<version>.delta.crc``) are still written and verified
       (tests/test_checkpoint_manager.py).
+    - ``file://`` is ``jvm/InProcessLocalFileSystem.java``, Hadoop's
+      ``LocalFileSystem`` over a ``RawLocalFileSystem`` whose
+      ``setPermission`` calls ``Files.setPosixFilePermissions``.
+      Without the native Hadoop library the stock one starts a
+      ``chmod`` process for every file and directory it creates: each
+      checkpoint log, state delta, sink file, ``.crc`` sidecar and
+      commit-protocol directory of every micro-batch. It keeps the
+      ``.crc`` sidecars (still a ``ChecksumFileSystem``), the file
+      layout and the modes; a mode with bits beyond ``0777`` (sticky)
+      goes to the stock method. It is compiled with ``javac`` once per
+      machine and installed only when this call launches the JVM
+      (the classpath is fixed afterwards), ``javac`` is on PATH and
+      Spark bundles the Hadoop jar to compile against; otherwise
+      Hadoop's own ``file://`` stays (tests/test_local_fs.py).
     """
     cpus = _DEFAULT_LOCAL_CPUS
     if master is None:
@@ -110,9 +178,8 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**_local_fs_conf(), **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

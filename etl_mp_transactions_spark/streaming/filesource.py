@@ -184,17 +184,16 @@ class scaled_state_partitions:
       target), no floor. A coalesce is plan, not checkpoint, so this
       count is derived again on EVERY start. Each sink task writes its
       own files, one per output partition value, and deserializes the
-      Hadoop conf. On a local filesystem without native Hadoop every
-      file or directory created starts a ``chmod`` process, so one
-      sink file costs two (the file and its ``.crc``) plus one per
-      directory it creates (a new partition value's directory, or the
-      task's ``_temporary`` attempt directories). A small batch spread
-      over 8 tasks pays 8x that fixed cost for no parallel gain. Pass
-      ``max_files_per_trigger`` when the stream sets it: the count
-      then follows the mean file size, not the bucket. Without it the
-      count follows everything staged, which over-counts a restart
-      that reads only new files once the staged total passes the
-      target.
+      Hadoop conf. Each sink file is two files on disk (the file and
+      its ``.crc``), and each task runs the commit protocol: it makes
+      its ``_temporary`` attempt directories, then the job commit
+      lists and renames every task's output into place. A small batch
+      spread over 8 tasks pays 8x that fixed cost for no parallel
+      gain. Pass ``max_files_per_trigger`` when the stream sets it:
+      the count then follows the mean file size, not the bucket.
+      Without it the count follows everything staged, which
+      over-counts a restart that reads only new files once the staged
+      total passes the target.
 
     Deriving both from the staged input size (guide §2.2 "fewer,
     larger partitions", made scale-adaptive) keeps the local bench

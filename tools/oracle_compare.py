@@ -17,12 +17,15 @@ sampled queries are auditable without re-running Spark.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import duckdb
 import numpy as np
 import pandas as pd
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -84,14 +87,12 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as e
     from etl_mp_transactions_spark.session import get_spark
 
     spark = get_spark("oracle-compare")
     con = duckdb.connect()
-    import os as _os
-
     # cap DuckDB: its default memory_limit is 80% of RAM, which on top
     # of the Spark driver heap OOM-killed the sf1 gate (r12) — spill
     # to disk instead. Default = min(24GB, half of detected RAM), so
@@ -99,17 +100,16 @@ def main() -> int:
     # Override with SPARK_GRAFT_DUCK_MEM.
     try:
         ram_gb = (
-            _os.sysconf("SC_PAGE_SIZE") * _os.sysconf("SC_PHYS_PAGES")
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
         ) // (1 << 30)
     except (ValueError, OSError):
         ram_gb = 48
-    duck_mem = _os.environ.get(
+    duck_mem = os.environ.get(
         "SPARK_GRAFT_DUCK_MEM", f"{max(1, min(24, ram_gb // 2))}GB"
     )
     con.sql(f"SET memory_limit = '{duck_mem}'")
     # anchor spill to the repo root, not whatever cwd we were run from
-    tmp = _os.path.join(_os.path.dirname(_os.path.dirname(
-        _os.path.abspath(__file__))), ".tmp")
+    tmp = os.path.join(ROOT, ".tmp")
     con.sql(f"SET temp_directory = '{tmp}'")
 
     for t in [
@@ -119,7 +119,7 @@ def main() -> int:
         p = f"{sf_dir}/{t}.parquet"
         # generated scale data writes multi-file tables as directories
         # (realistic layout; see tools/gen_scale_data.py ROWS_PER_FILE)
-        src = f"{p}/*.parquet" if _os.path.isdir(p) else p
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
     qs, oracles = e.queries(), e.oracle_sql()

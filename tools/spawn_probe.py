@@ -6,7 +6,8 @@ delivered twice, then documents through ``stream_incremental_dedup_run``),
 in a JFR recording of the session JVM (``jcmd <pid> JFR.start/stop``) and
 prints the ``jdk.ProcessStart`` events grouped by command and by the
 first Spark frame on the stack. One untimed call runs first, so staging
-and first-call set-up stay out of the count.
+and first-call set-up stay out of the count. ``record_spawns`` is the
+recording step; tests/test_local_fs.py calls it too.
 
 Usage: python tools/spawn_probe.py [--repo=DIR] sf_dir (--silver | query)
 
@@ -78,6 +79,32 @@ def _first_spark_frame(event: dict) -> str:
     return "(no spark frame)"
 
 
+def command(event: dict) -> str:
+    """The program name of one ``jdk.ProcessStart`` event."""
+    return os.path.basename(event["values"]["command"].split()[0])
+
+
+def record_spawns(spark, call) -> list[dict]:
+    """Run ``call()`` inside a JFR recording of the session JVM and
+    return the ``jdk.ProcessStart`` events it recorded."""
+    pid = str(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    with tempfile.TemporaryDirectory(prefix="spawn_probe_") as work:
+        jfr = os.path.join(work, "spawns.jfr")
+        subprocess.run(["jcmd", pid, "JFR.start", "name=spawn_probe"], check=True,
+                       capture_output=True)
+        try:
+            call()
+        finally:
+            subprocess.run(["jcmd", pid, "JFR.stop", "name=spawn_probe", f"filename={jfr}"],
+                           check=True, capture_output=True)
+        printed = subprocess.run(
+            ["jfr", "print", "--json", "--stack-depth", "64",
+             "--events", "jdk.ProcessStart", jfr],
+            check=True, capture_output=True, text=True,
+        ).stdout
+    return json.loads(printed)["recording"]["events"]
+
+
 def main() -> int:
     args = sys.argv[1:]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -91,7 +118,6 @@ def main() -> int:
 
     spark = get_spark("spawn-probe")
     work = tempfile.mkdtemp(prefix="spawn_probe_")
-    jfr = os.path.join(work, "spawns.jfr")
     try:
         if target == "--silver":
             call = _silver_pass(spark, sf_dir, work)
@@ -102,31 +128,13 @@ def main() -> int:
                 q(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
         call()  # untimed: staging and first-call set-up
-        pid = str(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
-        subprocess.run(["jcmd", pid, "JFR.start", "name=spawn_probe"], check=True,
-                       capture_output=True)
-        try:
-            call()
-        finally:
-            subprocess.run(["jcmd", pid, "JFR.stop", "name=spawn_probe", f"filename={jfr}"],
-                           check=True, capture_output=True)
-        printed = subprocess.run(
-            ["jfr", "print", "--json", "--stack-depth", "64",
-             "--events", "jdk.ProcessStart", jfr],
-            check=True, capture_output=True, text=True,
-        ).stdout
+        events = record_spawns(spark, call)
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
 
-    events = json.loads(printed)["recording"]["events"]
-    by_cmd = collections.Counter(
-        os.path.basename(e["values"]["command"].split()[0]) for e in events
-    )
-    by_frame = collections.Counter(
-        (os.path.basename(e["values"]["command"].split()[0]), _first_spark_frame(e))
-        for e in events
-    )
+    by_cmd = collections.Counter(command(e) for e in events)
+    by_frame = collections.Counter((command(e), _first_spark_frame(e)) for e in events)
     print(f"{target}: {len(events)} process starts")
     for cmd, n in by_cmd.most_common():
         print(f"  {n:6d}  {cmd}")
