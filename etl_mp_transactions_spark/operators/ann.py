@@ -3,15 +3,12 @@ exact cosine top-k, exact threshold near-dup, and LSH variants.
 
 Scale shapes (the 100 TB story — see SCALE.md "Similarity & ANN"):
 
-- ``cosine_topk`` (default): 2-D tiled block matmul via a cogrouped
-  ``applyInPandas``. Queries are hashed into QG chunks, corpus into G
-  tiles; each (chunk, tile) cell is one cogroup task scoring an
-  (n/QG × m/G) block with one BLAS matmul, emitting its local top-k;
-  a window merges per-query candidates globally. Per-task memory is
-  bounded by the cell size (tunable), data movement is O(n·G + m·QG)
-  — the 1-bucket-theta replication shape — and nothing is ever
-  collected to the driver. Exact answers; the plan is equi-shuffles +
-  FlatMapCoGroupsInPandas, no CartesianProduct.
+- ``cosine_topk`` (default): the package's one exact tiled top-k,
+  ``operators/tiled.tiled_topk`` with the cosine score — a 2-D grid
+  of cogroup cells, one BLAS matmul and a (−cos, id) selection per
+  cell, one window merge. Per-task memory is bounded by the cell,
+  data movement is O(n·TILES + m·CHUNKS) — the 1-bucket-theta
+  replication shape — and nothing is collected to the driver.
 - ``cosine_topk_bcast``: the small-corpus fast path — corpus matrix
   broadcast once, queries stream through ``mapInPandas``. ~2× faster
   below a few million rows but capped at driver/executor memory;
@@ -45,6 +42,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_mp_transactions_spark.operators.tiled import (
+    TILES,
+    _stack,
+    int_rows,
+    tiled_topk,
+)
+
 
 def _as_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -68,85 +72,17 @@ def with_unit_prep(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("_vec", d).withColumn("_norm", norm(F.col("_vec")))
 
 
-def _stack(col):
-    """Arrow list-of-float column → L2-normalized float64 matrix."""
-    import numpy as np
-
-    M = np.vstack([np.asarray(v, dtype=np.float64) for v in col])
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    return M
-
-
-def _local_topk_fn(k: int):
-    """Cogroup scorer: (query block: vec_id/embedding, corpus tile:
-    nid/nemb) → per-query local top-k rows (vec_id, neighbor_id, cos).
-    Exact within the cell; the caller merges cells with a global
-    window. The two sides use distinct column names because cogroup
-    sides sharing lineage (self-cogroup) collapse same-ExprId columns
-    during pruning — renaming forces fresh attributes."""
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame({"vec_id": [], "neighbor_id": [], "cos": []})
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return empty
-        q_ids = left["vec_id"].to_numpy(dtype="int64")
-        c_ids = right["nid"].to_numpy(dtype="int64")
-        S = _stack(left["embedding"]) @ _stack(right["nemb"]).T
-        out_v, out_n, out_c = [], [], []
-        for row, qid in enumerate(q_ids):
-            sims = S[row]
-            mask = c_ids != qid  # exclude self
-            cand_ids, cand_sims = c_ids[mask], sims[mask]
-            # order by (-cos, neighbor_id): lexsort keys are
-            # last-key-primary
-            order = np.lexsort((cand_ids, -cand_sims))[:k]
-            out_v.extend([qid] * len(order))
-            out_n.extend(cand_ids[order])
-            out_c.extend(cand_sims[order])
-        return pd.DataFrame({"vec_id": out_v, "neighbor_id": out_n, "cos": out_c})
-
-    return fn
-
-
 def cosine_topk(
-    embeddings: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    n_tiles: int = 8,
-    n_query_chunks: int = 4,
+    embeddings: DataFrame, k: int = 10, id_col: str = "vec_id"
 ) -> DataFrame:
     """Exact cosine top-k, distributed: (vec_id, neighbor_id, rank).
 
-    2-D tiled block matmul (see module docstring): no driver collect,
-    no broadcast of the corpus, per-task memory bounded by
-    (n/n_query_chunks + m/n_tiles) rows. Size the grid so a cell's two
-    blocks fit an executor core's Arrow budget at the target SF.
-    """
+    The 2-D tiled block matmul of ``operators/tiled.tiled_topk``: no
+    driver collect, no broadcast of the corpus, per-task memory
+    bounded by one grid cell."""
     emb = embeddings.select(F.col(id_col).cast("long").alias("vec_id"), "embedding")
-    corpus = emb.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("nemb"),
-        F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int").alias("ct"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_query_chunks - 1))).alias("qt"),
-    )
-    queries = emb.select(
-        "*",
-        F.pmod(F.col("vec_id"), F.lit(n_query_chunks)).cast("int").alias("qt"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_tiles - 1))).alias("ct"),
-    )
-    cand = (
-        queries.groupBy("qt", "ct")
-        .cogroup(corpus.groupBy("qt", "ct"))
-        .applyInPandas(_local_topk_fn(k), "vec_id long, neighbor_id long, cos double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "rank")
+    return tiled_topk(emb, emb, k, "cos").select(
+        F.col("src").alias("vec_id"), F.col("dst").alias("neighbor_id"), "rank"
     )
 
 
@@ -284,15 +220,14 @@ def neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.35,
     id_col: str = "vec_id",
-    n_tiles: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold), exact.
 
-    Triangular tiled self-join: rows hash into G tiles; every unordered
-    tile pair (i ≤ j) is one cogroup key — a row in tile t enters the
-    LEFT side of keys (t, j≥t) and the RIGHT side of keys (i≤t, t), so
-    each vector pair is scored in exactly one task. Replication is
-    O(n·G/2) per side vs the crossJoin's O(n²) shuffle; tasks are
+    Triangular tiled self-join: rows hash into the G = ``TILES`` tiles
+    of ``operators/tiled``; every unordered tile pair (i ≤ j) is one
+    cogroup key — a row in tile t enters the LEFT side of keys
+    (t, j≥t) and the RIGHT side of keys (i≤t, t), so each vector pair
+    is scored in exactly one task. Replication is O(n·G/2) per side vs the crossJoin's O(n²) shuffle; tasks are
     uniform (tiles are hash-balanced) so 1000 executors each score an
     equal block. Exactness: every pair reaches exactly one cell —
     diagonal cells keep a<b, off-diagonal cells are disjoint sets.
@@ -301,19 +236,19 @@ def neardup_pairs(
     import pandas as pd
 
     emb = embeddings.select(F.col(id_col).cast("long").alias("vec_id"), "embedding")
-    t = emb.withColumn("tile", F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int"))
+    t = emb.withColumn("tile", F.pmod(F.col("vec_id"), F.lit(TILES)).cast("int"))
     left = t.select(
-        "*", F.explode(F.sequence(F.col("tile"), F.lit(n_tiles - 1))).alias("j")
-    ).select(F.col("vec_id"), "embedding", "tile", (F.col("tile") * n_tiles + F.col("j")).alias("pk"))
+        "*", F.explode(F.sequence(F.col("tile"), F.lit(TILES - 1))).alias("j")
+    ).select(F.col("vec_id"), "embedding", "tile", (F.col("tile") * TILES + F.col("j")).alias("pk"))
     # distinct right-side names: cogroup sides with shared lineage
-    # collapse same-ExprId columns during pruning (see _local_topk_fn)
+    # collapse same-ExprId columns during pruning (see tiled_topk)
     right = t.select(
         "*", F.explode(F.sequence(F.lit(0), F.col("tile"))).alias("i")
     ).select(
         F.col("vec_id").alias("rid"),
         F.col("embedding").alias("remb"),
         F.col("tile").alias("rtile"),
-        (F.col("i") * n_tiles + F.col("tile")).alias("pk"),
+        (F.col("i") * TILES + F.col("tile")).alias("pk"),
     )
 
     empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
@@ -470,15 +405,14 @@ def hard_negatives_banded(
     if n_bits is None:
         n_bits = adaptive_band_bits(embeddings.count())
     # r16 shape: ONE shuffle of the n x n_bands band rows by
-    # (band, bucket), then a per-bucket numpy kernel — the graphann
-    # _knn_cell_kernel discipline. The former shape shuffled BOTH
-    # sides of a band self-join (qv payload riding each) plus a
+    # (band, bucket), then a per-bucket numpy kernel — the
+    # operators/tiled cell-kernel discipline. The former shape shuffled
+    # BOTH sides of a band self-join (qv payload riding each) plus a
     # bucket-cap window, then evaluated ~n_bands·cap interpreted
     # 64-element zip_with dots per anchor (measured as most of the
     # query's wall). Exactness: |qv| ≤ 2.4e6 < 2^31 (int32 Arrow
-    # payload, the _q32 halving); per-element products ≤ 5.76e12 and
-    # 64-term sums ≤ 3.7e14 < 2^53, so the float64 matmul is exact
-    # integer arithmetic. The bucket cap and the (qdot desc,
+    # payload, the _q32 halving), and int_rows makes the float64
+    # matmul exact integer arithmetic. The bucket cap and the (qdot desc,
     # negative_id asc) tiebreak replicate bit-for-bit: columns are
     # vec_id-sorted, so np.argmax's first-max IS the min-id tiebreak,
     # and the cap keeps the first MINE_BUCKET_CAP ids.
@@ -504,14 +438,14 @@ def hard_negatives_banded(
     def _mine_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         neg = pdf.iloc[:MINE_BUCKET_CAP]
-        Vn = np.stack(neg["qv"].to_numpy()).astype(np.float64)
+        Vn = int_rows(neg["qv"])
         nid = neg["vec_id"].to_numpy()
         nlab = neg["label"].to_numpy()
         out = []
         # anchor-side chunks bound kernel memory to chunk x cap
         for lo in range(0, len(pdf), 8192):
             a = pdf.iloc[lo : lo + 8192]
-            Va = np.stack(a["qv"].to_numpy()).astype(np.float64)
+            Va = int_rows(a["qv"])
             D = Va @ Vn.T
             mask = a["label"].to_numpy()[:, None] != nlab[None, :]
             valid = mask.any(axis=1)

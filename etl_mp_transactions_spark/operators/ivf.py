@@ -20,9 +20,10 @@ Fully distributed shape (no full-corpus collect anywhere):
 - **Inverted lists** are just the corpus keyed by centroid id — a
   partitioned table, not a driver-side dict.
 - **Search**: queries emit (query, probed_cid) rows for their nprobe
-  nearest centroids (map-only), cogroup with the lists on cid (one
-  equi-shuffle), local BLAS top-k per list, global window merge.
-  Per-task memory is one list + its probers; lists are disjoint so
+  nearest centroids (map-only), then the package's one exact top-k
+  (``operators/tiled.tiled_topk``, cosine score, ``on="cid"``)
+  cogroups them with the lists on cid (one equi-shuffle), takes a
+  BLAS top-k per list and merges with one window. Per-task memory is one list + its probers; lists are disjoint so
   no cross-probe dedup is needed. Cost per query: O(n·nprobe/k).
 
 At 100 TB: n_centroids should grow ~√n so lists stay bounded; the
@@ -36,9 +37,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from etl_mp_transactions_spark.operators.ann import _local_topk_fn, _stack
+from etl_mp_transactions_spark.operators.tiled import _stack, tiled_topk
 
 
 def _hash_order(df: DataFrame, id_col: str) -> DataFrame:
@@ -122,8 +122,6 @@ def ivf_topk(
     out_schema = "vec_id long, embedding array<float>, cid long"
 
     def assign(batches):
-        # corpus side of the cogroup: distinct names (nid/nemb), see
-        # operators/ann.py _local_topk_fn on self-cogroup pruning
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -132,8 +130,8 @@ def ivf_topk(
             best = np.argmax(_stack(pdf["embedding"]) @ C.T, axis=1)
             yield pd.DataFrame(
                 {
-                    "nid": pdf["vec_id"],
-                    "nemb": pdf["embedding"],
+                    "vec_id": pdf["vec_id"],
+                    "embedding": pdf["embedding"],
                     "cid": cids[best],
                 }
             )
@@ -155,18 +153,8 @@ def ivf_topk(
                 }
             )
 
-    lists = emb.mapInPandas(assign, "nid long, nemb array<float>, cid long")
+    lists = emb.mapInPandas(assign, out_schema)
     probes = emb.mapInPandas(probe, out_schema)
-    cand = (
-        probes.groupBy("cid")
-        .cogroup(lists.groupBy("cid"))
-        .applyInPandas(
-            _local_topk_fn(k_neighbors), "vec_id long, neighbor_id long, cos double"
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k_neighbors)
-        .select("vec_id", "neighbor_id", "rank")
+    return tiled_topk(probes, lists, k_neighbors, "cos", on="cid").select(
+        F.col("src").alias("vec_id"), F.col("dst").alias("neighbor_id"), "rank"
     )

@@ -31,11 +31,11 @@ reference counterpart, north-star additions.
 
 Exactness: vectors quantized to micro ints (the pq.py contract), all
 distances exact BIGINT (d2 ≤ 64·(2.4e6)² ≈ 3.7e14), ties broken by
-node id, entry and walk fully deterministic. The Spark kNN build is a
-2-D tiled cogroup (the operators/ann.cosine_topk shape) with an int64
-numpy Gram per cell — |a−b|² = |a|² + |b|² − 2ab with every product
-≤ 64·1.44e12 ≈ 9.2e13, exact in int64 — so graph edges match the
-DuckDB n² QUALIFY oracle bit for bit.
+node id, entry and walk fully deterministic. Both Spark kNN builds
+(exact tiled and IVF-seeded) are the package's one exact tiled top-k,
+``operators/tiled.tiled_topk`` with the d2 score — |a−b|² =
+|a|² + |b|² − 2ab over exact-integer blocks (``int_rows``) — so graph
+edges match the DuckDB n² QUALIFY oracle bit for bit.
 
 Scale shape (100 TB): TWO builds. The exact O(n²) build
 (``graph_ann_greedy_search``/``graph_ann_search_verdict``) is the
@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_mp_transactions_spark.operators.tiled import int_rows, tiled_topk
 from etl_mp_transactions_spark.queries.ivfpq_q import materialize_ctes
 from etl_mp_transactions_spark.registry import query
 from etl_mp_transactions_spark.sources.tables import load_table
@@ -322,113 +323,22 @@ def _quantized(emb: DataFrame) -> DataFrame:
     )
 
 
-def l2_knn_graph(
-    emb: DataFrame, deg: int = _DEG, n_tiles: int = 8, n_chunks: int = 4
-) -> DataFrame:
-    """(src, dst): exact quantized-L2 top-``deg`` per node via the 2-D
-    tiled cogroup (operators/ann.cosine_topk shape) with an int64
-    numpy Gram per cell — every distance exact, no CartesianProduct,
-    per-task memory bounded by the grid."""
-    return l2_knn_topk(emb, emb, deg, n_tiles, n_chunks).select(
-        "src", "dst"
-    )
-
-
-def _knn_cell_kernel(deg: int):
-    """Per-cell exact top-``deg`` kernel shared by the tiled exact
-    build and the IVF-bucketed build: left frame (vec_id, qv, …),
-    right frame (nid, nqv, …) → (src, dst, d2) rows, self excluded,
-    (d2, dst) tiebreak, int64-exact distances, query side blocked at
-    512 rows to bound the per-task distance matrix."""
-    import numpy as np
-    import pandas as pd
-
-    def local_knn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {"src": pd.Series(dtype="int64"),
-                 "dst": pd.Series(dtype="int64"),
-                 "d2": pd.Series(dtype="int64")}
-            )
-        # float64 matmul is EXACT here and hits BLAS (numpy int64
-        # matmul is scalar loops, ~20× slower): every product ≤
-        # (2.4e6)² ≈ 5.8e12 and every 64-term sum ≤ 64·that ≈
-        # 3.7e14 < 2^53, so each d2 is an exactly-representable
-        # integer; the int64 cast below is lossless.
-        A = np.stack(left["qv"].to_numpy()).astype(np.float64)
-        B = np.stack(right["nqv"].to_numpy()).astype(np.float64)
-        src_ids = left["vec_id"].to_numpy()
-        dst_ids = right["nid"].to_numpy()
-        bn = (B * B).sum(axis=1)
-        rows = []
-        k = min(deg + 1, B.shape[0])  # +1: self may be in the cell
-        for lo in range(0, A.shape[0], 512):
-            Ab = A[lo : lo + 512]
-            d2 = (
-                (Ab * Ab).sum(axis=1)[:, None]
-                + bn[None, :]
-                - 2 * (Ab @ B.T)
-            ).astype(np.int64)
-            for r in range(d2.shape[0]):
-                row = d2[r]
-                if k < row.shape[0]:
-                    # argpartition prunes, then an exact (d2, dst)
-                    # lexsort over everything <= the k-th value keeps
-                    # boundary ties deterministic
-                    part = np.argpartition(row, k - 1)[:k]
-                    thr = row[part].max()
-                    sel = np.nonzero(row <= thr)[0]
-                else:
-                    sel = np.arange(row.shape[0])
-                order = sel[np.lexsort((dst_ids[sel], row[sel]))][:k]
-                sid = src_ids[lo + r]
-                for c in order:
-                    if dst_ids[c] != sid:
-                        rows.append((sid, dst_ids[c], row[c]))
-        return pd.DataFrame(rows, columns=["src", "dst", "d2"]).astype(
-            "int64"
-        )
-
-    return local_knn
+def l2_knn_graph(emb: DataFrame, deg: int = _DEG) -> DataFrame:
+    """(src, dst): exact quantized-L2 top-``deg`` per node."""
+    return l2_knn_topk(emb, emb, deg).select("src", "dst")
 
 
 def l2_knn_topk(
-    queries_emb: DataFrame,
-    corpus_emb: DataFrame,
-    deg: int = _DEG,
-    n_tiles: int = 8,
-    n_chunks: int = 4,
+    queries_emb: DataFrame, corpus_emb: DataFrame, deg: int = _DEG
 ) -> DataFrame:
     """(src, dst, d2): exact top-``deg`` corpus neighbors per query
-    vector (self excluded) — the generalized tiled build; queries and
+    vector (self excluded) through the tiled exact top-k
+    (operators/tiled.tiled_topk, d2 score) — every distance exact, no
+    CartesianProduct, per-task memory bounded by the grid; queries and
     corpus may be different frames (the incremental-insert shapes)."""
-    q = _quantized(corpus_emb)
-    qq = _quantized(queries_emb)
-    corpus = q.select(
-        F.col("vec_id").alias("nid"),
-        F.col("qv").alias("nqv"),
-        F.pmod(F.col("vec_id"), F.lit(n_tiles)).cast("int").alias("ct"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("qt"),
-    )
-    queries = qq.select(
-        "*",
-        F.pmod(F.col("vec_id"), F.lit(n_chunks)).cast("int").alias("qt"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_tiles - 1))).alias("ct"),
-    )
-
-    cand = (
-        queries.groupBy("qt", "ct")
-        .cogroup(corpus.groupBy("qt", "ct"))
-        .applyInPandas(
-            _knn_cell_kernel(deg), "src long, dst long, d2 long"
-        )
-    )
-    w = Window.partitionBy("src").orderBy("d2", "dst")
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= deg)
-        .select("src", "dst", "d2")
-    )
+    return tiled_topk(
+        _quantized(queries_emb), _quantized(corpus_emb), deg, "d2"
+    ).select("src", "dst", "d2")
 
 
 def _d2_expr() -> F.Column:
@@ -634,8 +544,8 @@ def gann_books(emb: DataFrame):
 def gann_super(books):
     """Two-level quantizer structure over the KC coarse centroids
     (section constants): md5-rank ⌈√KC⌉ super-seeds, each centroid
-    assigned to its nearest super (exact integer d2 in float64 —
-    every term < 2^53 — with s-asc ties), PLUS forced self-membership
+    assigned to its nearest super (exact integer d2 in float64, the
+    ``int_rows`` bound, with s-asc ties), PLUS forced self-membership
     so every super-list provably contains its own seed centroid (no
     empty probed list can exist — the ADVICE r13 degenerate case is
     structurally gone). Returns (S, members): the ks×DIM float64
@@ -710,7 +620,7 @@ def _probes_df(emb: DataFrame, books, nprobe: int) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
+            V = int_rows(pdf["qv"])
             vn = (V * V).sum(axis=1)
             Ds = vn[:, None] + sn[None, :] - 2 * (V @ S.T)
             topj = np.argsort(Ds, axis=1, kind="stable")[:, :nsup]
@@ -770,7 +680,7 @@ def _probes_df_flat(emb: DataFrame, books, nprobe: int) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
+            V = int_rows(pdf["qv"])
             D = (V * V).sum(axis=1)[:, None] + bn[None, :] - 2 * (V @ B.T)
             idx = np.argsort(D, axis=1, kind="stable")[:, :nprobe]
             out = pdf.loc[pdf.index.repeat(idx.shape[1])].copy()
@@ -808,8 +718,8 @@ def ivf_knn_topk(
     """(src, dst, d2): per query node, exact top-``deg`` among the
     corpus members (by primary assignment) of its ``nprobe`` probed
     coarse lists — the IVF-seeded candidate generation. One shuffle
-    of n·(nprobe+1) rows by list id; per-list exact numpy kernel
-    (the shared ``_knn_cell_kernel``); per-node global top-deg over
+    of n·(nprobe+1) rows by list id, then ``tiled_topk`` keyed on the
+    list id: per-list exact kernel, per-node global top-deg over
     ≤ nprobe·deg survivors. A (src, dst) pair cannot repeat: dst has
     exactly one primary list. ``assign`` picks the probe kernel:
     'hier' (the shipped two-level assignment) or 'flat' (the retired
@@ -841,51 +751,22 @@ def ivf_knn_topk(
         # self-build: ONE assignment pass serves both sides (probe
         # rank 1 IS the primary assignment) — the n-row probes frame
         # is cut so the cogroup's two inputs don't recompute it
-        p = (
+        qf = (
             q_probes
             if q_probes is not None
             else probes(queries_emb, books, nprobe).localCheckpoint()
         )
-        qf = p.select("vec_id", "c", "qv")
-        mf = p.filter(F.col("pr") == 1).select(
-            F.col("vec_id").alias("nid"), "c", F.col("qv").alias("nqv")
-        )
+        mf = qf
     else:
-        qp = (
+        qf = (
             q_probes
             if q_probes is not None
             else probes(queries_emb, books, nprobe)
         )
-        # alias every column: precomputed probe frames may share
-        # lineage across the two cogroup sides (filtered/unioned
-        # views of one per-run assignment), and fresh exprIds keep
-        # the grouping column unambiguous
-        qf = qp.select(
-            F.col("vec_id").alias("vec_id"),
-            F.col("c").alias("c"),
-            F.col("qv").alias("qv"),
-        )
-        mp = (
-            m_probes.filter(F.col("pr") == 1)
-            if m_probes is not None
-            else probes(corpus_emb, books, 1)
-        )
-        mf = mp.select(
-            F.col("vec_id").alias("nid"),
-            F.col("c").alias("c"),
-            F.col("qv").alias("nqv"),
-        )
-    cand = (
-        qf.groupBy("c")
-        .cogroup(mf.groupBy("c"))
-        .applyInPandas(_knn_cell_kernel(deg), "src long, dst long, d2 long")
-    )
-    w = Window.partitionBy("src").orderBy("d2", "dst")
-    out = (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= deg)
-        .select("src", "dst", "d2")
-    )
+        mf = m_probes if m_probes is not None else probes(corpus_emb, books, 1)
+    out = tiled_topk(
+        qf, mf.filter(F.col("pr") == 1), deg, "d2", on="c"
+    ).select("src", "dst", "d2")
     return out.localCheckpoint(eager=False)
 
 
@@ -1231,7 +1112,7 @@ def graph_ann_build_flat_equiv(spark, sf_dir):
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
+            V = int_rows(pdf["qv"])
             Ds = (
                 (V * V).sum(axis=1)[:, None]
                 + bn[None, :]

@@ -325,7 +325,7 @@ def _topk_per_query(
     ).filter(F.col(rank_name) <= k)
 
 
-def _lex_arm(
+def _lex_arm_build(
     spark: SparkSession,
     sf_dir: str,
     qids: DataFrame | None = None,
@@ -341,15 +341,6 @@ def _lex_arm(
     corpus (doc_id, l) — the streaming twin materializes it once per
     RUN (within one declared query) and serves every micro-batch from
     it instead of re-tokenizing the corpus per batch."""
-    return _lex_arm_build(spark, sf_dir, qids, toks=toks)
-
-
-def _lex_arm_build(
-    spark: SparkSession,
-    sf_dir: str,
-    qids: DataFrame | None = None,
-    toks: DataFrame | None = None,
-) -> DataFrame:
     if toks is None:
         # the tokenized corpus feeds dl, qtoks AND tf — and the
         # broadcast subtrees (corpus stats, qterms, dfq) each run as
@@ -431,7 +422,7 @@ def _quantized(emb: DataFrame) -> DataFrame:
     )
 
 
-def _sem_arm(
+def _sem_arm_build(
     spark: SparkSession,
     sf_dir: str,
     qset: DataFrame | None = None,
@@ -440,18 +431,9 @@ def _sem_arm(
     """Semantic arm. ``qset`` (query_id, qqv quantized vector)
     overrides the default batch — the streaming twin passes the
     ARRIVING vectors, quantized per micro-batch. Computes fresh from
-    parquet on every call (no cross-query memo — _lex_arm). ``qv``
-    optionally supplies the quantized corpus (vec_id, qv), same
-    once-per-RUN contract as _lex_arm's ``toks``."""
-    return _sem_arm_build(spark, sf_dir, qset, qv=qv)
-
-
-def _sem_arm_build(
-    spark: SparkSession,
-    sf_dir: str,
-    qset: DataFrame | None = None,
-    qv: DataFrame | None = None,
-) -> DataFrame:
+    parquet on every call (no cross-query memo, as in the lexical arm).
+    ``qv`` optionally supplies the quantized corpus (vec_id, qv), same
+    once-per-RUN contract as _lex_arm_build's ``toks``."""
     if qv is None:
         # referenced by both the broadcast query-side subtree and the
         # corpus scan side — one lazy localCheckpoint per call keeps
@@ -492,31 +474,58 @@ def _rrf_part(c: str) -> Column:
     )
 
 
-def _fused(
-    spark: SparkSession,
-    sf_dir: str,
-    qids: DataFrame | None = None,
-    qset: DataFrame | None = None,
-    toks: DataFrame | None = None,
-    qv: DataFrame | None = None,
-) -> DataFrame:
-    lex = _lex_arm(spark, sf_dir, qids, toks=toks).select(
-        "query_id", "doc_id", "r_lex"
-    )
-    sem = _sem_arm(spark, sf_dir, qset, qv=qv).select(
-        "query_id", "doc_id", "r_sem"
-    )
+def _ranked(lex: DataFrame, sem: DataFrame) -> DataFrame:
+    """Every doc of either built arm list (``_lex_arm_build`` /
+    ``_sem_arm_build``) with both arm ranks (0 = absent), its RRF
+    score and its fused rank. Callers pass arm frames they built
+    once, so one call builds each arm once."""
     fusedall = (
-        lex.join(sem, ["query_id", "doc_id"], "full_outer")
+        lex.select("query_id", "doc_id", "r_lex")
+        .join(
+            sem.select("query_id", "doc_id", "r_sem"),
+            ["query_id", "doc_id"],
+            "full_outer",
+        )
         .withColumn("r_lex", F.coalesce("r_lex", F.lit(0).cast("long")))
         .withColumn("r_sem", F.coalesce("r_sem", F.lit(0).cast("long")))
         .withColumn("rrf_nano", _rrf_part("r_lex") + _rrf_part("r_sem"))
     )
     # single-phase window is safe here: <= 2*K_ARM rows per query
     fw = Window.partitionBy("query_id").orderBy(F.desc("rrf_nano"), "doc_id")
-    return fusedall.withColumn(
-        "fused_rank", F.row_number().over(fw).cast("long")
-    ).filter(F.col("fused_rank") <= _K_FUSED)
+    return fusedall.withColumn("fused_rank", F.row_number().over(fw).cast("long"))
+
+
+def _fused(lex: DataFrame, sem: DataFrame) -> DataFrame:
+    """The fused (RRF) top-``_K_FUSED`` list of two built arm frames."""
+    return _ranked(lex, sem).filter(F.col("fused_rank") <= _K_FUSED)
+
+
+_EVAL_LISTS = [("r_lex", "lex"), ("r_sem", "sem"), ("fused_rank", "rrf")]
+
+
+def _relevant_ranks(spark: SparkSession, sf_dir: str):
+    """(qlab, rel): the query batch's labels, and every label-matching
+    doc of the lexical, semantic and fused lists with its three ranks
+    — one pass over the arms serves all three lists' metrics. Docs
+    without vectors have no label and count as non-relevant."""
+    lab = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("doc_id"), "label"
+    )
+    qlab = lab.filter(F.col("doc_id") < _NQ).select(
+        F.col("doc_id").alias("query_id"), F.col("label").alias("qlabel")
+    )
+    rel = (
+        _ranked(_lex_arm_build(spark, sf_dir), _sem_arm_build(spark, sf_dir))
+        .join(lab, "doc_id")
+        .join(F.broadcast(qlab), "query_id")
+        .filter(F.col("label") == F.col("qlabel"))
+    )
+    return qlab, rel
+
+
+def _in_window(rank_col: str) -> Column:
+    """In the top-``_K_FUSED`` of that list (rank 0 = absent)."""
+    return F.col(rank_col).between(1, _K_FUSED)
 
 
 @query(
@@ -530,7 +539,7 @@ def hybrid_lexical_topk(spark, sf_dir):
     """Per-query BM25 top-20 (the lexical arm alone): exact-BIGINT
     rational BM25, rank output. Module docstring has the kernel
     derivation and the scale shape."""
-    return _lex_arm(spark, sf_dir).select(
+    return _lex_arm_build(spark, sf_dir).select(
         "query_id", "doc_id", "bm25_nano", "r_lex"
     )
 
@@ -547,9 +556,9 @@ RRF_FUSION_SQL = materialize_ctes(
 def hybrid_rrf_fusion(spark, sf_dir):
     """RRF fusion of the lexical and semantic top-20 lists (fused
     top-10 per query, both arm ranks carried; absent rank = 0)."""
-    return _fused(spark, sf_dir).select(
-        "query_id", "doc_id", "r_lex", "r_sem", "rrf_nano", "fused_rank"
-    )
+    return _fused(
+        _lex_arm_build(spark, sf_dir), _sem_arm_build(spark, sf_dir)
+    ).select("query_id", "doc_id", "r_lex", "r_sem", "rrf_nano", "fused_rank")
 
 
 @query(
@@ -599,42 +608,16 @@ def hybrid_fusion_gain(spark, sf_dir):
     relevance: the measured per-query answer to "does fusion beat the
     best single arm". Docs without vectors have no label and count as
     non-relevant (stated contract, identical in both engines)."""
-    lex = _lex_arm(spark, sf_dir)
-    sem = _sem_arm(spark, sf_dir)
-    fused = _fused(spark, sf_dir)
-    lab = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"), "label"
-    )
-    qlab = lab.filter(F.col("doc_id") < _NQ).select(
-        F.col("doc_id").alias("query_id"), F.col("label").alias("qlabel")
-    )
-
-    def hits(df: DataFrame, rank_col: str, name: str) -> DataFrame:
-        return (
-            df.filter(F.col(rank_col) <= _K_FUSED)
-            .join(lab, "doc_id")
-            .join(F.broadcast(qlab), "query_id")
-            .filter(F.col("label") == F.col("qlabel"))
-            .groupBy("query_id")
-            .agg(F.count("*").alias(name))
-        )
-
-    out = (
-        qlab.select("query_id")
-        .join(hits(lex, "r_lex", "hits_lex"), "query_id", "left")
-        .join(hits(sem, "r_sem", "hits_sem"), "query_id", "left")
-        .join(hits(fused, "fused_rank", "hits_rrf"), "query_id", "left")
+    qlab, rel = _relevant_ranks(spark, sf_dir)
+    hits = rel.groupBy("query_id").agg(
+        *(F.count(F.when(_in_window(c), 1)).alias(f"hits_{n}") for c, n in _EVAL_LISTS)
     )
     z = F.lit(0).cast("long")
-    return out.select(
+    h = {n: F.coalesce(f"hits_{n}", z) for _, n in _EVAL_LISTS}
+    return qlab.select("query_id").join(hits, "query_id", "left").select(
         "query_id",
-        F.coalesce("hits_lex", z).alias("hits_lex"),
-        F.coalesce("hits_sem", z).alias("hits_sem"),
-        F.coalesce("hits_rrf", z).alias("hits_rrf"),
-        (
-            F.coalesce("hits_rrf", z)
-            >= F.greatest(F.coalesce("hits_lex", z), F.coalesce("hits_sem", z))
-        ).alias("fused_ok"),
+        *(h[n].alias(f"hits_{n}") for _, n in _EVAL_LISTS),
+        (h["rrf"] >= F.greatest(h["lex"], h["sem"])).alias("fused_ok"),
     )
 
 
@@ -650,7 +633,7 @@ def hybrid_mmr_rerank(spark, sf_dir):
     at λ = 0.7 (score = 7·reln − 3·max-sim-to-selected, exact BIGINT).
     Pool = fused top-10 ∩ embedded docs; queries whose pool is smaller
     than 5 yield fewer picks — identically in both engines."""
-    fused = _fused(spark, sf_dir)
+    fused = _fused(_lex_arm_build(spark, sf_dir), _sem_arm_build(spark, sf_dir))
     qv = _quantized(load_table(spark, sf_dir, "embeddings"))
     pool0 = fused.join(
         qv.select(F.col("vec_id").alias("doc_id"), "qv"), "doc_id"
@@ -825,40 +808,17 @@ def hybrid_mrr_eval(spark, sf_dir):
     for each arm and the fused list, nano-scaled (0 = no relevant in
     window) — with hits@10 (hybrid_fusion_gain) this completes the
     IR-eval pair the serving path is tuned by."""
-    lex = _lex_arm(spark, sf_dir)
-    sem = _sem_arm(spark, sf_dir)
-    fused = _fused(spark, sf_dir)
-    lab = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"), "label"
-    )
-    qlab = lab.filter(F.col("doc_id") < _NQ).select(
-        F.col("doc_id").alias("query_id"), F.col("label").alias("qlabel")
-    )
-
-    def rr(df: DataFrame, rank_col: str, name: str) -> DataFrame:
-        return (
-            df.filter(F.col(rank_col) <= _K_FUSED)
-            .join(lab, "doc_id")
-            .join(F.broadcast(qlab), "query_id")
-            .filter(F.col("label") == F.col("qlabel"))
-            .groupBy("query_id")
-            .agg(
-                F.round(F.lit(1e9) / F.min(rank_col))
-                .cast("long")
-                .alias(name)
-            )
+    qlab, rel = _relevant_ranks(spark, sf_dir)
+    rr = rel.groupBy("query_id").agg(
+        *(
+            F.round(F.lit(1e9) / F.min(F.when(_in_window(c), F.col(c))))
+            .cast("long")
+            .alias(f"rr_{n}_nano")
+            for c, n in _EVAL_LISTS
         )
-
+    )
     z = F.lit(0).cast("long")
-    return (
-        qlab.select("query_id")
-        .join(rr(lex, "r_lex", "rr_lex_nano"), "query_id", "left")
-        .join(rr(sem, "r_sem", "rr_sem_nano"), "query_id", "left")
-        .join(rr(fused, "fused_rank", "rr_rrf_nano"), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("rr_lex_nano", z).alias("rr_lex_nano"),
-            F.coalesce("rr_sem_nano", z).alias("rr_sem_nano"),
-            F.coalesce("rr_rrf_nano", z).alias("rr_rrf_nano"),
-        )
+    return qlab.select("query_id").join(rr, "query_id", "left").select(
+        "query_id",
+        *(F.coalesce(f"rr_{n}_nano", z).alias(f"rr_{n}_nano") for _, n in _EVAL_LISTS),
     )

@@ -163,10 +163,10 @@ _VERDICT_SQL = materialize_ctes(
 
 
 def _interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_mp_transactions_spark.queries.hybrid import _lex_arm, _sem_arm
+    from etl_mp_transactions_spark.queries.hybrid import _lex_arm_build, _sem_arm_build
 
-    lex = _lex_arm(spark, sf_dir).filter(F.col("r_lex") <= _K)
-    sem = _sem_arm(spark, sf_dir).filter(F.col("r_sem") <= _K)
+    lex = _lex_arm_build(spark, sf_dir).filter(F.col("r_lex") <= _K)
+    sem = _sem_arm_build(spark, sf_dir).filter(F.col("r_sem") <= _K)
     armrows = (
         lex.select(
             "query_id",

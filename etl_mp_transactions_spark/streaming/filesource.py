@@ -1068,6 +1068,8 @@ def stream_hybrid_serving_run(
     from etl_mp_transactions_spark.operators.pq import _quantized
     from etl_mp_transactions_spark.queries.hybrid import (
         _fused,
+        _lex_arm_build,
+        _sem_arm_build,
         _tokens_expr,
     )
     from etl_mp_transactions_spark.sources.tables import load_table
@@ -1103,7 +1105,8 @@ def stream_hybrid_serving_run(
         )
         qids = fresh.select(F.col("query_id").alias("doc_id"))
         fused = _fused(
-            spark, sf_dir, qids=qids, qset=fresh, toks=toks, qv=corpus_qv
+            _lex_arm_build(spark, sf_dir, qids, toks=toks),
+            _sem_arm_build(spark, sf_dir, fresh, qv=corpus_qv),
         )
         write_ledger(
             fused.select(

@@ -61,12 +61,24 @@ def test_tiled_topk_equals_broadcast_blas(spark, sf_dir):
     assert tiled == bcast
 
 
-def test_tiled_topk_grid_invariance(spark, sf_dir):
-    # the tiling grid is a physical choice — results must not depend on it
+def test_tiled_topk_grid_invariance(spark, sf_dir, monkeypatch):
+    # the tiling grid is a physical choice — results must not depend on
+    # it, for either score type of the one tiled top-k
+    from etl_mp_transactions_spark.operators import tiled
+    from etl_mp_transactions_spark.queries.graphann import l2_knn_topk
+
     emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    a = sorted(map(tuple, cosine_topk(emb, k=4, n_tiles=3, n_query_chunks=2).collect()))
-    b = sorted(map(tuple, cosine_topk(emb, k=4, n_tiles=8, n_query_chunks=5).collect()))
-    assert a == b
+    for search in (
+        lambda: cosine_topk(emb, k=4),
+        lambda: l2_knn_topk(emb, emb, 4),
+    ):
+        monkeypatch.setattr(tiled, "TILES", 3)
+        monkeypatch.setattr(tiled, "CHUNKS", 2)
+        a = sorted(map(tuple, search().collect()))
+        monkeypatch.setattr(tiled, "TILES", 8)
+        monkeypatch.setattr(tiled, "CHUNKS", 5)
+        b = sorted(map(tuple, search().collect()))
+        assert a == b
 
 
 def _bruteforce_pairs(emb_df, threshold):

@@ -158,9 +158,9 @@ def test_arm_topk_two_phase_matches_single_window(spark, sf_dir):
     window (exactness of the partial-top-k shape)."""
     from pyspark.sql import Window
 
-    from etl_mp_transactions_spark.queries.hybrid import _sem_arm
+    from etl_mp_transactions_spark.queries.hybrid import _sem_arm_build
 
-    got = _sem_arm(spark, sf_dir)
+    got = _sem_arm_build(spark, sf_dir)
     base = got.select("query_id", "doc_id", "d2")
     w = Window.partitionBy("query_id").orderBy("d2", "doc_id")
     # got is already the top-K_ARM; ranking it again must be a no-op
@@ -174,8 +174,8 @@ def test_arm_topk_two_phase_matches_single_window(spark, sf_dir):
 def test_mrr_consistent_with_lists(spark, sf_dir):
     """Re-derive each reciprocal rank from the raw lists + labels."""
     from etl_mp_transactions_spark.queries.hybrid import (
-        _lex_arm,
-        _sem_arm,
+        _lex_arm_build,
+        _sem_arm_build,
         hybrid_mrr_eval,
     )
 
@@ -195,8 +195,8 @@ def test_mrr_consistent_with_lists(spark, sf_dir):
                 best[r.query_id] = min(best.get(r.query_id, 99), rank)
         return {q: _rha(1e9 / rk) for q, rk in best.items()}
 
-    el = first_rel(_lex_arm(spark, sf_dir).collect(), "r_lex")
-    es = first_rel(_sem_arm(spark, sf_dir).collect(), "r_sem")
+    el = first_rel(_lex_arm_build(spark, sf_dir).collect(), "r_lex")
+    es = first_rel(_sem_arm_build(spark, sf_dir).collect(), "r_sem")
     ef = first_rel(
         hybrid_rrf_fusion(spark, sf_dir).collect(), "fused_rank"
     )
@@ -204,3 +204,24 @@ def test_mrr_consistent_with_lists(spark, sf_dir):
         assert r.rr_lex_nano == el.get(r.query_id, 0)
         assert r.rr_sem_nano == es.get(r.query_id, 0)
         assert r.rr_rrf_nano == ef.get(r.query_id, 0)
+
+
+def test_eval_entries_build_each_arm_once(spark, sf_dir, monkeypatch):
+    """hits@10 and MRR read both arms AND their fusion; fusing the
+    arm frames already built means one tokenized-corpus (toks) and
+    one quantized-corpus (qv) checkpoint per call, not two of each."""
+    from etl_mp_transactions_spark.queries.hybrid import hybrid_mrr_eval
+
+    frame = type(spark.range(1))
+    calls = []
+    checkpoint = frame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", counted)
+    for entry in (hybrid_fusion_gain, hybrid_mrr_eval):
+        calls.clear()
+        entry(spark, sf_dir)
+        assert len(calls) == 2, entry.__name__

@@ -6,7 +6,7 @@ a full Python replay of the draft."""
 import hashlib
 from collections import defaultdict
 
-from etl_mp_transactions_spark.queries.hybrid import _lex_arm, _sem_arm
+from etl_mp_transactions_spark.queries.hybrid import _lex_arm_build, _sem_arm_build
 from etl_mp_transactions_spark.queries.interleave import (
     _K,
     _ROUNDS,
@@ -39,12 +39,12 @@ def test_draft_python_replay(spark, sf_dir):
     lists; picks, positions, teams, and source ranks must match."""
     lex = {
         (r.query_id, r.doc_id): r.r_lex
-        for r in _lex_arm(spark, sf_dir).collect()
+        for r in _lex_arm_build(spark, sf_dir).collect()
         if r.r_lex <= _K
     }
     sem = {
         (r.query_id, r.doc_id): r.r_sem
-        for r in _sem_arm(spark, sf_dir).collect()
+        for r in _sem_arm_build(spark, sf_dir).collect()
         if r.r_sem <= _K
     }
     qs = sorted({q for q, _ in lex} | {q for q, _ in sem})

@@ -92,11 +92,11 @@ def test_hybrid_arms_recompute_and_agree(spark, sf_dir):
     from etl_mp_transactions_spark.queries import hybrid as hy
 
     cols = ["query_id", "doc_id", "bm25_nano", "r_lex"]
-    assert _rows(hy._lex_arm(spark, sf_dir), cols) == _rows(
+    assert _rows(hy._lex_arm_build(spark, sf_dir), cols) == _rows(
         hy._lex_arm_build(spark, sf_dir, None), cols
     )
     scols = ["query_id", "doc_id", "d2", "r_sem"]
-    assert _rows(hy._sem_arm(spark, sf_dir), scols) == _rows(
+    assert _rows(hy._sem_arm_build(spark, sf_dir), scols) == _rows(
         hy._sem_arm_build(spark, sf_dir, None), scols
     )
 
