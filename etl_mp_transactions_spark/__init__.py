@@ -12,7 +12,16 @@ whole-stage codegen). See SURVEY.md for the operator inventory and the
 file:line parity citations into /root/reference.
 """
 
-from etl_mp_transactions_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # imported lazily: the Python worker daemon (pyworker.py) is run
+    # with ``python -m``, which imports this package before it may
+    # import pyspark
+    if name == "get_spark":
+        from etl_mp_transactions_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

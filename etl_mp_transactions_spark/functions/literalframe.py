@@ -4,24 +4,23 @@
 PYTHON RDD of pickled rows: every ACTION whose plan contains such a
 frame starts one Python worker task per partition to rehydrate it —
 even for an empty list, which still parallelizes into
-defaultParallelism empty partitions. Each such task costs ~0.2s of
-CPU, and the cost is not the rows: pyspark's worker calls
-``importlib.invalidate_caches()`` on every task, and on Python 3.11
-that makes each of the 16 zipimporters over ``pyspark.zip`` re-read
-the archive's directory (~27k entries). Measured ~0.25s per action
-on a 4-core local session, paid again on every re-execution
-(broadcast subtrees, unions, repeated consumers). For the
-trained-book / step-frame literals this engine creates constantly
-(KC/KS codebooks, Newton step rows, trajectory rows) and for the
-empty "nothing seen yet" frames of the streaming runners, that
-Python round IS the dominant cost of the downstream job at small SF
-and pure overhead at any SF.
+defaultParallelism empty partitions — and pays the Python round trip
+again on every re-execution (broadcast subtrees, unions, repeated
+consumers). Those tasks used to cost ~0.2 s of CPU each, because every
+task re-read the directory of each zip archive on the workers'
+``sys.path``; the session's worker daemon (``pyworker.py``) now starts
+the workers without those archives, for every Python task of the
+session, and a trivial task costs ~0.01 s (``tools/worker_probe.py``).
+For the trained-book / step-frame literals this engine creates
+constantly (KC/KS codebooks, Newton step rows, trajectory rows) and for
+the empty "nothing seen yet" frames of the streaming runners, the
+round trip itself is still pure overhead.
 
 ``literal_frame`` keeps the rows in the JVM instead:
 - non-empty rows go through the Arrow ``createDataFrame(pandas)``
   path, converted ONCE at creation (driver-side, Arrow batch → JVM);
-  execution reads JVM memory with no Python workers — measured
-  0.034s/action vs 0.27, same values, same declared schema;
+  execution reads JVM memory with no Python workers, same values,
+  same declared schema;
 - no rows become an empty JVM ``LocalRelation`` with exactly the
   declared schema (names, types and nullability), so an action over
   it runs no task at all.

@@ -715,9 +715,10 @@ def ivf_knn_topk(
     q_probes: DataFrame | None = None,
     m_probes: DataFrame | None = None,
 ) -> DataFrame:
-    """(src, dst, d2): per query node, exact top-``deg`` among the
+    """(src, dst, d2, rnk): per query node, exact top-``deg`` among the
     corpus members (by primary assignment) of its ``nprobe`` probed
-    coarse lists — the IVF-seeded candidate generation. One shuffle
+    coarse lists — the IVF-seeded candidate generation; ``rnk`` (long,
+    1-based) orders a node's edges by (d2, dst). One shuffle
     of n·(nprobe+1) rows by list id, then ``tiled_topk`` keyed on the
     list id: per-list exact kernel, per-node global top-deg over
     ≤ nprobe·deg survivors. A (src, dst) pair cannot repeat: dst has
@@ -766,7 +767,7 @@ def ivf_knn_topk(
         mf = m_probes if m_probes is not None else probes(corpus_emb, books, 1)
     out = tiled_topk(
         qf, mf.filter(F.col("pr") == 1), deg, "d2", on="c"
-    ).select("src", "dst", "d2")
+    ).select("src", "dst", "d2", F.col("rank").alias("rnk"))
     return out.localCheckpoint(eager=False)
 
 
@@ -793,13 +794,7 @@ def graph_ann_ivf_build(spark, sf_dir):
     (graph_ann_greedy_search) and as the verdict's per-query recall
     reference."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = gann_books(emb)
-    w = Window.partitionBy("src").orderBy("d2", "dst")
-    return (
-        ivf_knn_topk(emb, emb, books)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .select("src", "dst", "d2", "rnk")
-    )
+    return ivf_knn_topk(emb, emb, gann_books(emb))
 
 
 _IVF_VERDICT_SQL = materialize_ctes(
@@ -931,9 +926,7 @@ def graph_ann_incremental_insert(spark, sf_dir):
         .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= _DEG)
     )
-    arr_edges = ivf_knn_topk(arriving, emb, books).withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    )
+    arr_edges = ivf_knn_topk(arriving, emb, books)
     return upd.select("src", "dst", "rnk").unionByName(
         arr_edges.select("src", "dst", "rnk")
     )
@@ -969,12 +962,7 @@ def graph_ann_delete_repair(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     survivors = emb.filter(F.expr(_DEL_PRED))
     books = gann_books(emb)  # frozen from the PRE-delete corpus
-    w = Window.partitionBy("src").orderBy("d2", "dst")
-    base_graph = (
-        ivf_knn_topk(emb, emb, books)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .localCheckpoint()
-    )
+    base_graph = ivf_knn_topk(emb, emb, books)
     deleted = emb.filter(~F.expr(_DEL_PRED)).select(
         F.col("vec_id").alias("dst")
     )
@@ -995,12 +983,7 @@ def graph_ann_delete_repair(spark, sf_dir):
     aff_emb = survivors.join(
         affected.withColumnRenamed("src", "vec_id"), "vec_id", "semi"
     )
-    repaired = ivf_knn_topk(aff_emb, survivors, books).withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    )
-    return keep.unionByName(
-        repaired.select("src", "dst", "d2", "rnk")
-    )
+    return keep.unionByName(ivf_knn_topk(aff_emb, survivors, books))
 
 
 # ------------------------------- build==flat equivalence pin (r14)
@@ -1220,7 +1203,7 @@ def graph_ann_index_roundtrip(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     books = gann_books(emb)
     art = os.path.join(run_dir("gann_idx"), "graph")
-    ivf_knn_topk(emb, emb, books).write.mode(
+    ivf_knn_topk(emb, emb, books).drop("rnk").write.mode(
         "overwrite"
     ).parquet(art)
     reloaded = spark.read.schema("src long, dst long, d2 long").parquet(

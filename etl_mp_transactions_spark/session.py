@@ -30,9 +30,8 @@ from etl_mp_transactions_spark.workdirs import publish_fixture
 # scale you want cores*2..3 initial partitions and let AQE coalesce.
 _DEFAULT_LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-_LOCAL_FS_SRC = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "jvm", "InProcessLocalFileSystem.java"
-)
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_LOCAL_FS_SRC = os.path.join(_PKG_DIR, "jvm", "InProcessLocalFileSystem.java")
 _LOCAL_FS_CLASS = "etl_mp_transactions_spark.jvm.InProcessLocalFileSystem"
 
 
@@ -72,6 +71,22 @@ def _local_fs_conf() -> dict[str, str]:
     return {
         "spark.driver.extraClassPath": classes,
         "spark.hadoop.fs.file.impl": _LOCAL_FS_CLASS,
+    }
+
+
+def _python_worker_conf() -> dict[str, str]:
+    """Confs that start the Python workers through ``pyworker.py``: the
+    daemon module, and this package's parent directory on the workers'
+    PYTHONPATH so ``python -m`` finds it. Empty unless this pyspark is
+    the JVM's Spark version, since the daemon may then import it in
+    place of the ``pyspark.zip`` that Spark bundles."""
+    cores = glob.glob(os.path.join(_find_spark_home(), "jars", "spark-core_*.jar"))
+    versions = {os.path.basename(j)[: -len(".jar")].rsplit("-", 1)[-1] for j in cores}
+    if versions != {pyspark.__version__}:
+        return {}
+    return {
+        "spark.python.daemon.module": "etl_mp_transactions_spark.pyworker",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(_PKG_DIR),
     }
 
 
@@ -124,6 +139,14 @@ def get_spark(
       (the classpath is fixed afterwards), ``javac`` is on PATH and
       Spark bundles the Hadoop jar to compile against; otherwise
       Hadoop's own ``file://`` stays (tests/test_local_fs.py).
+    - Python workers start through ``pyworker.py``, which takes the
+      bundled ``pyspark.zip``, py4j zip and spark-core jar off
+      ``sys.path`` before it runs ``pyspark.daemon``: every task calls
+      ``importlib.invalidate_caches()``, which re-reads each zip
+      archive's directory (≈0.12 CPU s per task). Set only when this
+      pyspark is the JVM's Spark version; the zips stay when no
+      installed pyspark and py4j import without them
+      (tests/test_python_worker.py).
     """
     cpus = _DEFAULT_LOCAL_CPUS
     if master is None:
@@ -178,7 +201,8 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
-    for k, v in {**_local_fs_conf(), **(extra_conf or {})}.items():
+    confs = {**_local_fs_conf(), **_python_worker_conf(), **(extra_conf or {})}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -116,6 +116,19 @@ def build_bronze(
 # bump when the fixture derivation above changes — the staged parquet
 # cache below is keyed by it (v2: completeness marked by _DONE)
 _BRONZE_FIXTURE_VERSION = "v2"
+# the staged parquet's schema, declared so a read runs no inference
+# job (analyzing build_bronze for it costs more than inferring);
+# tests/test_load_table.py pins it against the inferring read
+_BRONZE_DDL = (
+    "userId STRING, companyId STRING, payload ARRAY<STRUCT<"
+    "header: STRUCT<account_number: STRING, account_alias: STRING,"
+    " currency: STRING, timeframe: STRING, report_date: STRING,"
+    " bank: STRING, extraction_timestamp: TIMESTAMP_NTZ>,"
+    " lines: ARRAY<STRUCT<checksum: STRING, date: STRING, concept: STRING,"
+    " amount: DOUBLE, remaining: DOUBLE,"
+    " metadata: ARRAY<STRUCT<key: STRING, value: STRING>>>>>>,"
+    " year INT, month INT, day INT, company_id STRING"
+)
 
 
 def staged_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,7 +144,7 @@ def staged_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrent loser reads the winner's copy. Content is a pure
     function of (orders, lineitem), so any published copy is
     identical."""
-    return spark.read.parquet(staged_bronze_path(spark, sf_dir))
+    return spark.read.schema(_BRONZE_DDL).parquet(staged_bronze_path(spark, sf_dir))
 
 
 def staged_bronze_path(spark: SparkSession, sf_dir: str) -> str:

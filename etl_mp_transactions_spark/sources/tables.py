@@ -1,10 +1,11 @@
 """Typed loaders for the driver-generated parquet tables (TESTDATA.md).
 
 Parquet is self-describing, so reads never infer from data; the schemas
-below are the *contract* — ``load_table`` validates what the file
-declares against what the engine expects, failing fast on drift instead
-of silently mis-typing (the reference's dynamic dicts defaulted missing
-fields to '' — see SURVEY.md §1.3; we eliminate that class by checking).
+below are the *contract* — ``load_table`` validates what the file's
+footer declares against what the engine expects, failing fast on drift
+instead of silently mis-typing (the reference's dynamic dicts defaulted
+missing fields to '' — see SURVEY.md §1.3; we eliminate that class by
+checking).
 
 Scale note: these are plain columnar scans. Filters/projections applied
 by callers reach the parquet reader via Catalyst (PushedFilters /
@@ -102,7 +103,7 @@ SCHEMAS: dict[str, T.StructType] = {
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            # stored as TIMESTAMP(NANOS) → read as long, converted in load_table
+            # TIMESTAMP(NANOS) in some files → read as long, converted in load_table
             T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
@@ -129,42 +130,80 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
+def _footer_schema(path: str):
+    """The Arrow schema in the parquet footer of ``path``, or of the
+    first data file under it when it is a directory of part files (the
+    file Spark's own inference would read)."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        path = min(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    return pq.read_schema(path)
+
+
+def _spark_type(arrow_type) -> str:
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    try:
+        # parquet timestamps without a UTC adjustment read as NTZ
+        return from_arrow_type(arrow_type, prefer_timestamp_ntz=True).simpleString()
+    except TypeError:
+        return str(arrow_type)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, asserting the schema contract.
 
+    The contract is checked against the parquet footer on the driver
+    and the table is read with its declared schema, so a read runs no
+    Spark job (an inferring ``spark.read.parquet`` runs one per call).
+    Drift (a missing column or a changed type) raises ``ValueError``.
+
     Defensive against externally-created sessions (the driver passes
-    its own): the nanos-parquet conf is set here, and the nanos→ntz
-    conversion is pure NTZ arithmetic — no instant/LTZ hop, so the
-    result is identical under any session timezone.
+    its own): when ``events.ts`` is TIMESTAMP(NANOS) the nanos-parquet
+    conf is set here, and the nanos→ntz conversion is pure NTZ
+    arithmetic — no instant/LTZ hop, so the result is identical under
+    any session timezone.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    if name == "events":
-        # events.ts is TIMESTAMP(NANOS), which the vectorized reader
-        # rejects unless read as long (runtime-settable conf)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
-
-        # integer `div` (a double intermediate loses µs precision at
-        # nanos-since-epoch magnitudes); timestampadd on an NTZ epoch
-        # base keeps the wall-clock independent of session timezone
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-    expected = {(f.name, f.dataType.simpleString()) for f in SCHEMAS[name].fields}
-    actual = {(f.name, f.dataType.simpleString()) for f in df.schema.fields}
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    footer = _footer_schema(path)
+    schema = SCHEMAS[name]
+    # TIMESTAMP(NANOS), which the vectorized reader rejects unless
+    # read as long (runtime-settable conf)
+    nanos = name == "events" and "ts" in footer.names and (
+        str(footer.field("ts").type) == "timestamp[ns]"
+    )
+    actual = {(f.name, _spark_type(f.type)) for f in footer}
+    expected = {(f.name, f.dataType.simpleString()) for f in schema.fields}
     if not expected <= actual:
         raise ValueError(
             f"schema drift for {name}: missing {sorted(expected - actual)}; "
             f"file has {sorted(actual)}"
         )
-    return df
+    if not nanos:
+        return spark.read.schema(schema).parquet(path)
+    from pyspark.sql import functions as F
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = T.StructType(
+        [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in schema.fields]
+    )
+    # integer `div` (a double intermediate loses µs precision at
+    # nanos-since-epoch magnitudes); timestampadd on an NTZ epoch
+    # base keeps the wall-clock independent of session timezone
+    return spark.read.schema(schema).parquet(path).withColumn(
+        "ts",
+        F.expr(
+            "timestampadd(MICROSECOND, ts div 1000,"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+        ),
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -86,14 +86,22 @@ def run_available_now_to_parquet(
 ) -> DataFrame:
     """Shared sink pattern: one AvailableNow pass appending to a
     parquet sink (checkpoint-recoverable), returning the accumulated
-    output. Used by the dedup, funnel and silver streams."""
+    output. Used by the dedup, funnel and silver streams. The sink is
+    read back with the schema it was written with, the data columns in
+    stream order and then the ``partition_by`` columns, so the read runs
+    no schema-inference job."""
+    parts = partition_by or []
     writer = df.writeStream.format("parquet").outputMode("append").option(
         "path", out_dir
     )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    if parts:
+        writer = writer.partitionBy(*parts)
     _drain(writer, checkpoint_dir)
-    return df.sparkSession.read.parquet(out_dir)
+    written = StructType(
+        [f for f in df.schema.fields if f.name not in parts]
+        + [df.schema[c] for c in parts]
+    )
+    return df.sparkSession.read.schema(written).parquet(out_dir)
 
 
 def run_per_file(
@@ -1247,7 +1255,7 @@ def stream_graph_insert_run(
     # base fragment: the frozen-books self-build over the base slice
     # (fresh per call — no cross-query graph memo, VERDICT r15 #2)
     write_ledger(
-        ivf_knn_topk(base_emb, base_emb, books, q_probes=base_probes),
+        ivf_knn_topk(base_emb, base_emb, books, q_probes=base_probes).drop("rnk"),
         edges_dir,
         "base",
     )
@@ -1287,7 +1295,7 @@ def stream_graph_insert_run(
                 m_probes=fresh_probes,
             )
         )
-        write_ledger(frag, edges_dir, batch_id)
+        write_ledger(frag.drop("rnk"), edges_dir, batch_id)
 
     run_per_file(spark, src_dir, SCHEMAS["embeddings"], checkpoint_dir, maintain)
     frags = _read_batches(spark, edges_dir, edge_schema)
